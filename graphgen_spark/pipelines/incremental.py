@@ -39,18 +39,12 @@ def kg_state_from_records(
     records: DataFrame, labels: DataFrame | None = None
 ) -> dict[str, DataFrame]:
     """records (long format, operators/kg_extract.py) -> the mergeable
-    per-batch state dict."""
-    from graphgen_spark.operators.kg_extract import (
-        entities_from_records,
-        relations_from_records,
-    )
-    from graphgen_spark.pipelines.kg_pipeline import canonicalize
+    per-batch state dict, over the canonicalized entities / relations
+    of the shared records -> graph tail."""
+    from graphgen_spark.pipelines.kg_pipeline import records_to_graph
 
-    entities = entities_from_records(records)
-    relations = relations_from_records(records)
-    entities, relations = canonicalize(entities, relations, labels)
-    if labels is None:
-        relations = relations.where(F.col("src_id") != F.col("tgt_id"))
+    g = records_to_graph(records, labels)
+    entities, relations = g["entities"], g["relations"]
     return {
         "node_aggs": _capped_aggs(entities, ["entity_name"]),
         "node_types": node_type_counts(entities),

@@ -4,10 +4,17 @@ pages(url, warc_ts, html, text, lang)
   -> extract_text (Arrow UDF, byte-identical per url)
   -> chunk (mapInPandas, splitter parity)            [repartition url-hash]
   -> extract records (mock-LLM grammar + parser)
-  -> entities / relations (projections)
-  -> canonicalize (alias-dict broadcast link + CC labels)
-  -> merge_nodes / merge_edges (hash aggregates)     [shuffle by entity]
-  -> triples + coverage stats
+  -> records_to_graph, the one records -> graph tail every entry point
+     shares (this module, the checkpointed materializer, the config
+     runner's build_kg node, incremental state):
+       entities / relations (projections)
+       -> canonicalize (alias-dict broadcast link + CC labels; drops
+          self-loops on every path, with or without a dictionary)
+       -> triples, and lazily merge_nodes / merge_edges
+                                                     [shuffle by entity]
+
+``fused=True`` replaces the first three hops with one Python hop
+(operators.fused) that can also link map-side; the tail is the same.
 
 Mirrors the reference flagship config
 (``examples/generate/generate_aggregated_qa/aggregated_config.yaml``)
@@ -15,6 +22,8 @@ but with the graph in the dataflow instead of a storage actor.
 """
 
 from __future__ import annotations
+
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +37,18 @@ from graphgen_spark.operators.kg_extract import (
 )
 from graphgen_spark.operators.merge import merge_edges, merge_nodes
 from graphgen_spark.operators.text import with_extracted_text
+
+# Map-side linking collects the label table to the driver for a Python
+# broadcast — a driver OOM with a multi-GB alias dictionary.  Past this
+# many label rows the fused UDF extracts WITHOUT linking and
+# canonicalize() does the same rewrite as a JVM broadcast join
+# (identical records; one extra shuffle-free stage).
+LABEL_MAP_MAX_ROWS = 2_000_000
+
+# labels frame -> its label-map broadcast (None past the size guard).
+# Keyed on the frame object itself (DataFrames hash by identity), so
+# an entry lives exactly as long as the caller's frame.
+_LABEL_MAP_BC: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def alias_labels(alias_dict: DataFrame) -> DataFrame:
@@ -65,77 +86,47 @@ def canonicalize(
     labels: DataFrame | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Rewrite mention surface forms to canonical keys (broadcast map
-    join); unlinked names stay themselves."""
-    if labels is None:
-        return entities, relations
-    lab = F.broadcast(labels)
+    join); unlinked names stay themselves.  Self-loops are never valid
+    triples (a mention like "X acquired X", or aliases collapsing both
+    endpoints to one canonical key) and are dropped here on every
+    path, ``labels is None`` included."""
+    if labels is not None:
+        lab = F.broadcast(labels)
+        entities = (
+            entities.join(
+                lab, entities.entity_name == lab.alias_norm, "left"
+            )
+            .withColumn(
+                "entity_name",
+                F.coalesce("canonical_key", "entity_name"),
+            )
+            .drop("alias_norm", "canonical_key")
+        )
 
-    ents = (
-        entities.join(
-            lab, entities.entity_name == lab.alias_norm, "left"
+        lab_s = lab.select(
+            F.col("alias_norm").alias("_src_alias"),
+            F.col("canonical_key").alias("_src_canon"),
         )
-        .withColumn(
-            "entity_name",
-            F.coalesce("canonical_key", "entity_name"),
+        lab_t = lab.select(
+            F.col("alias_norm").alias("_tgt_alias"),
+            F.col("canonical_key").alias("_tgt_canon"),
         )
-        .drop("alias_norm", "canonical_key")
-    )
-
-    lab_s = lab.select(
-        F.col("alias_norm").alias("_src_alias"),
-        F.col("canonical_key").alias("_src_canon"),
-    )
-    lab_t = lab.select(
-        F.col("alias_norm").alias("_tgt_alias"),
-        F.col("canonical_key").alias("_tgt_canon"),
-    )
-    rels = (
-        relations.join(
-            lab_s, relations.src_id == lab_s._src_alias, "left"
+        relations = (
+            relations.join(
+                lab_s, relations.src_id == lab_s._src_alias, "left"
+            )
+            .join(lab_t, relations.tgt_id == lab_t._tgt_alias, "left")
+            .withColumn("_s", F.coalesce("_src_canon", "src_id"))
+            .withColumn("_t", F.coalesce("_tgt_canon", "tgt_id"))
+            .select(
+                F.least("_s", "_t").alias("src_id"),
+                F.greatest("_s", "_t").alias("tgt_id"),
+                "description",
+                "source_id",
+                "url",
+            )
         )
-        .join(lab_t, relations.tgt_id == lab_t._tgt_alias, "left")
-        .withColumn("_s", F.coalesce("_src_canon", "src_id"))
-        .withColumn("_t", F.coalesce("_tgt_canon", "tgt_id"))
-        .select(
-            F.least("_s", "_t").alias("src_id"),
-            F.greatest("_s", "_t").alias("tgt_id"),
-            "description",
-            "source_id",
-            "url",
-        )
-        .where(F.col("src_id") != F.col("tgt_id"))
-    )
-    return ents, rels
-
-
-def records_to_graph(
-    records: DataFrame, labels: DataFrame | None = None
-) -> dict[str, DataFrame]:
-    """Shared tail: records long format -> canonicalized entities /
-    relations -> merged nodes/edges -> triples."""
-    entities = entities_from_records(records)
-    relations = relations_from_records(records)
-    entities_c, relations_c = canonicalize(entities, relations, labels)
-    if labels is None:
-        relations_c = relations_c.where(
-            F.col("src_id") != F.col("tgt_id")
-        )
-    nodes = merge_nodes(entities_c)
-    edges = merge_edges(relations_c, nodes)
-    triples = relations_c.select(
-        F.col("src_id").alias("subj"),
-        F.col("description").alias("pred"),
-        F.col("tgt_id").alias("obj"),
-        F.col("source_id").alias("chunk_id"),
-        "url",
-    )
-    return {
-        "entities": entities_c,
-        "relations": relations_c,
-        "nodes": nodes,
-        "edges": edges,
-        "triples": triples,
-    }
+    return entities, relations.where(F.col("src_id") != F.col("tgt_id"))
 
 
 class _LazyFrames(dict):
@@ -150,9 +141,13 @@ class _LazyFrames(dict):
     dict.  (Only a raw C-level ``dict(out)`` copy would bypass the
     overrides; no caller does that.)"""
 
-    def __init__(self, base: dict, thunks: dict):
+    def __init__(self, base: dict):
         super().__init__(base)
-        self._thunks = dict(thunks)
+        self._thunks: dict = {}
+
+    def defer(self, **thunks) -> None:
+        """Add entries built by calling their thunk on first access."""
+        self._thunks.update(thunks)
 
     def _force(self, k) -> None:
         th = self._thunks.pop(k, None)
@@ -196,6 +191,58 @@ class _LazyFrames(dict):
         return super().items()
 
 
+def records_to_graph(
+    records: DataFrame, labels: DataFrame | None = None
+) -> _LazyFrames:
+    """The one records -> graph tail: records long format ->
+    canonicalized entities / relations (self-loops dropped) -> triples,
+    plus merged nodes / edges built on first access.  ``labels=None``
+    when there is no dictionary or the records are already linked."""
+    entities, relations = canonicalize(
+        entities_from_records(records),
+        relations_from_records(records),
+        labels,
+    )
+    triples = relations.select(
+        F.col("src_id").alias("subj"),
+        F.col("description").alias("pred"),
+        F.col("tgt_id").alias("obj"),
+        F.col("source_id").alias("chunk_id"),
+        "url",
+    )
+    out = _LazyFrames({
+        "records": records,
+        "entities": entities,
+        "relations": relations,
+        "triples": triples,
+    })
+    out.defer(
+        nodes=lambda: merge_nodes(entities),
+        edges=lambda: merge_edges(relations, out["nodes"]),
+    )
+    return out
+
+
+def _label_map_broadcast(spark: SparkSession, labels: DataFrame):
+    """``sc.broadcast({alias_norm: canonical_key})`` for map-side
+    linking in the fused UDF, or None when ``labels`` has more than
+    LABEL_MAP_MAX_ROWS rows.  The label table is a static per-release
+    asset, so the count + collect + broadcast is computed once per
+    frame (batch callers pass the same checkpointed frame per batch;
+    re-running it per call cost ~0.2 s/batch)."""
+    if labels in _LABEL_MAP_BC:
+        return _LABEL_MAP_BC[labels]
+    bc = None
+    if labels.count() <= LABEL_MAP_MAX_ROWS:
+        lp = labels.select("alias_norm", "canonical_key").toPandas()
+        bc = spark.sparkContext.broadcast(
+            dict(zip(lp["alias_norm"].tolist(),
+                     lp["canonical_key"].tolist()))
+        )
+    _LABEL_MAP_BC[labels] = bc
+    return bc
+
+
 def run_mixed_kg_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -230,7 +277,7 @@ def run_mixed_kg_pipeline(
         else None
     )
     out = records_to_graph(records, labels)
-    out.update({"chunks": chunks, "records": records})
+    out["chunks"] = chunks
     return out
 
 
@@ -240,12 +287,9 @@ def run_kg_pipeline(
     alias_dict: DataFrame | None = None,
     chunk_size: int = 1024,
     chunk_overlap: int = 100,
-    extraction_partitions: int | None = None,
-    verify_text_invariant: bool = False,
     precomputed_labels: DataFrame | None = None,
     fused: bool = False,
     persist_records: bool = False,
-    label_map_max_rows: int = 2_000_000,
 ) -> dict[str, DataFrame]:
     """Run the full spine; returns the named intermediate + final
     DataFrames (all lazy except the CC fixpoint inside alias_labels).
@@ -267,20 +311,17 @@ def run_kg_pipeline(
     records as a stage table.
     """
     # repartition by url hash: extraction cost is ~uniform per doc and
-    # this keeps hot-host pages from skewing a single input split.
-    # Default is adaptive: a small parquet input arrives as ONE split
-    # (a 5k-page suite dir is a single row group), which would run the
-    # whole Python extraction in one task — widen to the session's
-    # parallelism.  Inputs already wider than the core count (any real
-    # crawl dump) are left alone: no shuffle of raw html at scale.
-    if extraction_partitions is None:
-        cur = pages.rdd.getNumPartitions()
-        par = spark.sparkContext.defaultParallelism
-        if cur < par:
-            extraction_partitions = par
+    # this keeps hot-host pages from skewing a single input split.  A
+    # small parquet input arrives as ONE split (a 5k-page suite dir is
+    # a single row group), which would run the whole Python extraction
+    # in one task — widen to the session's parallelism.  Inputs already
+    # wider than the core count (any real crawl dump) are left alone:
+    # no shuffle of raw html at scale.
+    par = spark.sparkContext.defaultParallelism
+    widen = pages.rdd.getNumPartitions() < par
     pages_in = pages  # pre-repartition input, for the docs plan below
-    if extraction_partitions:
-        pages = pages.repartition(extraction_partitions, F.crc32("url"))
+    if widen:
+        pages = pages.repartition(par, F.crc32("url"))
 
     def _build_docs() -> DataFrame:
         d = with_extracted_text(
@@ -290,16 +331,15 @@ def run_kg_pipeline(
             F.col("extracted_text").alias("text"),
             "warc_ts",
         )
-        if verify_text_invariant:
-            d = d.withColumn("_orig", F.col("text"))
-        if extraction_partitions:
-            d = d.repartition(extraction_partitions, F.crc32("url"))
-        return d
+        return d.repartition(par, F.crc32("url")) if widen else d
 
     def _build_chunks(d: DataFrame) -> DataFrame:
         return chunk_documents(
             d, chunk_size=chunk_size, chunk_overlap=chunk_overlap
         )
+
+    # The label table is a static asset of the candidate dictionary
+    # (built once per release) — batch callers pass precomputed_labels.
     if precomputed_labels is not None:
         labels = precomputed_labels
     elif alias_dict is not None:
@@ -307,112 +347,42 @@ def run_kg_pipeline(
     else:
         labels = None
 
-    linked_in_udf = False
     if fused:
         from graphgen_spark.operators.fused import pages_to_records
 
-        label_map_bc = None
-        if labels is not None:
-            # Map-side linking collects the label table to the driver
-            # for a Python broadcast — a driver OOM with a multi-GB
-            # alias dictionary.  Size-guard it: past the threshold the
-            # fused UDF extracts WITHOUT linking and canonicalize()
-            # below does the same rewrite as a JVM broadcast join
-            # (identical records; one extra shuffle-free stage).
-            # The labels table is a static per-release asset, so the
-            # count + collect + broadcast is a pure function of the
-            # DataFrame — memoize it ON the object (batch callers pass
-            # the same checkpointed frame per batch; re-running the
-            # count job + driver collect per call cost ~0.2 s/batch).
-            memo = getattr(labels, "_gg_label_bc_memo", None)
-            if memo is not None and memo[0] == label_map_max_rows:
-                label_map_bc = memo[1]
-                linked_in_udf = label_map_bc is not None
-            else:
-                if labels.count() <= label_map_max_rows:
-                    lp = labels.select(
-                        "alias_norm", "canonical_key"
-                    ).toPandas()
-                    label_map = dict(
-                        zip(
-                            lp["alias_norm"].tolist(),
-                            lp["canonical_key"].tolist(),
-                        )
-                    )
-                    label_map_bc = spark.sparkContext.broadcast(
-                        label_map
-                    )
-                    linked_in_udf = True
-                labels._gg_label_bc_memo = (
-                    label_map_max_rows, label_map_bc,
-                )
+        # Entity linking: map-side inside the fused UDF when the label
+        # map fits the size guard, else the JVM broadcast join in
+        # canonicalize.
+        label_map_bc = (
+            _label_map_broadcast(spark, labels)
+            if labels is not None
+            else None
+        )
         records = pages_to_records(
             pages, chunk_size=chunk_size, chunk_overlap=chunk_overlap,
             label_map_bc=label_map_bc,
         )
+        if label_map_bc is not None:
+            labels = None  # records are already canonical
     else:
-        docs_built = _build_docs()
-        chunks_built = _build_chunks(docs_built)
-        records = extract_records(chunks_built)
+        docs = _build_docs()
+        chunks = _build_chunks(docs)
+        records = extract_records(chunks)
     if persist_records:
         from pyspark.storagelevel import StorageLevel
 
         records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    entities = entities_from_records(records)
-    relations = relations_from_records(records)
+    out = records_to_graph(records, labels)
 
-    # Entity linking: map-side inside the fused UDF when possible
-    # (one broadcast variable), else the JVM broadcast-join stage.
-    # The label table is a static asset of the candidate dictionary
-    # (built once per release) — batch callers pass precomputed_labels.
-    if linked_in_udf:
-        entities_c, relations_c = entities, relations
-    else:
-        entities_c, relations_c = canonicalize(
-            entities, relations, labels
-        )
-    # self-loops are never valid triples (a mention like "X acquired
-    # X", or aliases collapsing both endpoints to one canonical key);
-    # canonicalize filters the post-rewrite ones, this catches the
-    # no-dictionary path too
-    relations_c = relations_c.where(F.col("src_id") != F.col("tgt_id"))
-
-    triples = relations_c.select(
-        F.col("src_id").alias("subj"),
-        F.col("description").alias("pred"),
-        F.col("tgt_id").alias("obj"),
-        F.col("source_id").alias("chunk_id"),
-        "url",
-    )
-
-    # nodes/edges (and, on the fused path, docs/chunks) plan
-    # construction is deferred to first access (r7): pure driver-side
-    # py4j latency that triples-only consumers never need; the frames
-    # themselves are unchanged.  The non-fused path has already built
-    # docs/chunks (records derive from them) and returns those same
-    # objects.
-    def _nodes():
-        return merge_nodes(entities_c)
-
-    def _edges():
-        return merge_edges(relations_c, _out["nodes"])
-
-    def _docs():
-        return _build_docs()
-
-    def _chunks():
-        return _build_chunks(_out["docs"])
-
-    eager = {
-        "records": records,
-        "entities": entities_c,
-        "relations": relations_c,
-        "triples": triples,
-    }
-    lazy = {"nodes": _nodes, "edges": _edges}
+    # on the fused path docs/chunks plan construction is deferred to
+    # first access (r7): pure driver-side py4j latency that the
+    # triples/nodes/edges path never needs.  The composed path has
+    # already built them (records derive from them).
     if fused:
-        lazy.update({"docs": _docs, "chunks": _chunks})
+        out.defer(
+            docs=_build_docs,
+            chunks=lambda: _build_chunks(out["docs"]),
+        )
     else:
-        eager.update({"docs": docs_built, "chunks": chunks_built})
-    _out = _LazyFrames(eager, lazy)
-    return _out
+        out.update({"docs": docs, "chunks": chunks})
+    return out

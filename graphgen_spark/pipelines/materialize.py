@@ -7,7 +7,11 @@ Stage tables under ``ckpt_root``:
     records/   (content-addressed)   — parsed extraction records
     done_docs/, done_chunks/         — processed-input manifests
     nodes/ edges/ triples/ coverage/ — final tables (recomputed from
-                                       the full records table: merge
+                                       the full records table through
+                                       ``records_to_graph``, the one
+                                       records -> graph tail every entry
+                                       point shares; canonicalize drops
+                                       self-loops on every path.  Merge
                                        aggregates are cheap relative to
                                        extraction, and union-new+old →
                                        groupBy is the reference's own
@@ -34,15 +38,13 @@ from graphgen_spark.operators.checkpointing import (
     overwrite_lineage,
 )
 from graphgen_spark.operators.chunking import chunk_documents
-from graphgen_spark.operators.kg_extract import (
-    entities_from_records,
-    extract_records,
-    relations_from_records,
-)
-from graphgen_spark.operators.merge import merge_edges, merge_nodes
+from graphgen_spark.operators.kg_extract import extract_records
 from graphgen_spark.operators.stats import coverage_by_url
 from graphgen_spark.operators.text import with_extracted_text
-from graphgen_spark.pipelines.kg_pipeline import alias_labels, canonicalize
+from graphgen_spark.pipelines.kg_pipeline import (
+    alias_labels,
+    records_to_graph,
+)
 
 
 def _anti_by(df: DataFrame, done: DataFrame | None, keys: list[str]) -> DataFrame:
@@ -111,30 +113,16 @@ def run_checkpointed(
     ).parquet(os.path.join(ckpt_root, "done_record_chunks"))
 
     # -- final tables: recomputed from the full records table ---------
-    entities = entities_from_records(records)
-    relations = relations_from_records(records)
     labels = (
         alias_labels(alias_dict).localCheckpoint(eager=True)
         if alias_dict is not None
         else None
     )
-    entities_c, relations_c = canonicalize(entities, relations, labels)
-    nodes = merge_nodes(entities_c)
-    edges = merge_edges(relations_c, nodes)
-    triples = relations_c.select(
-        F.col("src_id").alias("subj"),
-        F.col("description").alias("pred"),
-        F.col("tgt_id").alias("obj"),
-        F.col("source_id").alias("chunk_id"),
-        "url",
-    )
-
+    g = records_to_graph(records, labels)
     out = {}
-    for name, df in [
-        ("nodes", nodes), ("edges", edges), ("triples", triples),
-    ]:
+    for name in ("nodes", "edges", "triples"):
         path = os.path.join(ckpt_root, name)
-        df.write.mode("overwrite").parquet(path)
+        g[name].write.mode("overwrite").parquet(path)
         out[name] = spark.read.parquet(path)
     cov_path = os.path.join(ckpt_root, "coverage")
     coverage_by_url(out["triples"]).write.mode("overwrite").parquet(cov_path)

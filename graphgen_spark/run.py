@@ -77,7 +77,6 @@ def _op_build_kg(spark, deps, params):
     (chunks,) = deps
     records = extract_records(chunks)
     out = records_to_graph(records)
-    out["records"] = records
     out["nodes"] = out["nodes"].localCheckpoint(eager=True)
     out["edges"] = out["edges"].localCheckpoint(eager=True)
     return out

@@ -120,7 +120,7 @@ SESSION_STATE_SCHEMA = "session_start double, last_ts double, n_events long"
 def sessionize_stream(
     events_stream: DataFrame,
     gap_sec: int = 1800,
-    idle_timeout_ms: int = 30_000,
+    watermark: str = "2 hours",
 ) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user sessionization with a ``gap_sec`` inactivity gap — the
@@ -129,10 +129,14 @@ def sessionize_stream(
 
     State per user = (session_start, last_ts, n_events).  A session row
     is emitted when a later event closes it (closed_by='gap') or when
-    the state times out after ``idle_timeout_ms`` of processing-time
-    inactivity (closed_by='timeout').  State is a 3-tuple per active
-    user — bounded regardless of stream length."""
+    the event-time watermark (max event time minus ``watermark``, the
+    late-data tolerance) passes ``last_ts + gap_sec`` (closed_by=
+    'timeout').  The timeout is in event time, so an
+    ``availableNow`` trigger drains: no-data batches run only while the
+    watermark advances.  State is a 3-tuple per active user — bounded
+    regardless of stream length."""
     import pandas as pd
+    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import (
         GroupState,
         GroupStateTimeout,
@@ -151,9 +155,7 @@ def sessionize_stream(
             return
         ts_all = []
         for pdf in pdfs:
-            ts_all.extend(
-                pdf["ts"].astype("datetime64[us]").astype("int64") / 1e6
-            )
+            ts_all.extend(pdf["_ts_us"] / 1e6)
         ts_all.sort()
         rows = []
         if state.exists:
@@ -171,17 +173,24 @@ def sessionize_stream(
                 last = max(last, t)
                 n += 1
         state.update((s0, last, n))
-        state.setTimeoutDuration(idle_timeout_ms)
+        state.setTimeoutTimestamp(int(round((last + gap_sec) * 1000)))
         yield pd.DataFrame(
             rows,
             columns=["user_id", "session_start", "session_end",
                      "n_events", "closed_by"],
         )
 
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        events_stream.withWatermark("ts", watermark)
+        # epoch micros from the JVM: the timeout timestamp is compared
+        # with the (epoch) watermark whatever the session time zone
+        .withColumn("_ts_us", F.unix_micros("ts"))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=SESSION_OUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )

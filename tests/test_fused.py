@@ -2,7 +2,7 @@
 bit-identical to the composed text->chunk->records path."""
 
 from graphgen_spark import synth
-from graphgen_spark.pipelines import run_kg_pipeline
+from graphgen_spark.pipelines import alias_labels, kg_pipeline, run_kg_pipeline
 
 
 def _triples(out):
@@ -46,72 +46,49 @@ class TestFusedEquivalence:
 
 
 class TestLabelMapSizeGuard:
-    def test_guard_falls_back_to_jvm_join(self, spark):
-        """label_map_max_rows=0 forces the fused path to skip the
-        driver collect and link via the JVM broadcast join — triples
-        must be identical to the map-side-linked fused run."""
+    def test_guard_falls_back_to_jvm_join(self, spark, monkeypatch):
+        """A label table past LABEL_MAP_MAX_ROWS skips the driver
+        collect and links via the JVM broadcast join in canonicalize —
+        triples must be identical to the map-side-linked fused run."""
         pages = synth.pages_df(spark, 50, 200)
         alias = synth.alias_dictionary_df(spark, 200)
         mapside = run_kg_pipeline(
             spark, pages, alias_dict=alias,
             chunk_size=256, chunk_overlap=32, fused=True,
         )
+        monkeypatch.setattr(kg_pipeline, "LABEL_MAP_MAX_ROWS", 0)
+        labels = alias_labels(alias).localCheckpoint(eager=True)
         guarded = run_kg_pipeline(
-            spark, pages, alias_dict=alias,
+            spark, pages, precomputed_labels=labels,
             chunk_size=256, chunk_overlap=32, fused=True,
-            label_map_max_rows=0,
         )
+        assert kg_pipeline._label_map_broadcast(spark, labels) is None
         assert _triples(guarded) == _triples(mapside)
 
 
 class TestLabelBroadcastMemo:
-    """r7: the label count/collect/broadcast is memoized ON the labels
-    DataFrame (a static per-release asset) so repeated batches with the
-    same precomputed_labels skip ~0.2 s of per-call driver work."""
+    """The label count/collect/broadcast is kept per labels frame (a
+    static per-release asset) so repeated batches with the same
+    precomputed_labels skip ~0.2 s of per-call driver work."""
 
     def test_memo_reused_across_calls_identical_triples(self, spark):
-        from graphgen_spark.pipelines import alias_labels
-
         pages = synth.pages_df(spark, 40, 200)
-        alias = synth.alias_dictionary_df(spark, 200)
-        labels = alias_labels(alias).localCheckpoint(eager=True)
+        labels = alias_labels(
+            synth.alias_dictionary_df(spark, 200)
+        ).localCheckpoint(eager=True)
         out1 = run_kg_pipeline(
             spark, pages, precomputed_labels=labels,
             chunk_size=256, chunk_overlap=32, fused=True,
         )
-        t1 = _triples(out1)
-        memo = getattr(labels, "_gg_label_bc_memo", None)
-        assert memo is not None and memo[1] is not None
+        bc = kg_pipeline._label_map_broadcast(spark, labels)
+        assert bc is not None
         out2 = run_kg_pipeline(
             spark, pages, precomputed_labels=labels,
             chunk_size=256, chunk_overlap=32, fused=True,
         )
-        # second call reused the memo (same tuple object, not rebuilt)
-        assert labels._gg_label_bc_memo is memo
-        assert _triples(out2) == t1
-
-    def test_memo_keyed_on_threshold(self, spark):
-        """A call with a different label_map_max_rows must NOT reuse a
-        memo built under another threshold — the guard decision is part
-        of the key."""
-        from graphgen_spark.pipelines import alias_labels
-
-        pages = synth.pages_df(spark, 40, 200)
-        alias = synth.alias_dictionary_df(spark, 200)
-        labels = alias_labels(alias).localCheckpoint(eager=True)
-        mapside = run_kg_pipeline(
-            spark, pages, precomputed_labels=labels,
-            chunk_size=256, chunk_overlap=32, fused=True,
-        )
-        assert labels._gg_label_bc_memo[1] is not None
-        guarded = run_kg_pipeline(
-            spark, pages, precomputed_labels=labels,
-            chunk_size=256, chunk_overlap=32, fused=True,
-            label_map_max_rows=0,
-        )
-        # guard re-evaluated: memo now records the guarded (None) path
-        assert labels._gg_label_bc_memo == (0, None)
-        assert _triples(guarded) == _triples(mapside)
+        # the second call reused the broadcast (same object, not rebuilt)
+        assert kg_pipeline._label_map_broadcast(spark, labels) is bc
+        assert _triples(out2) == _triples(out1)
 
 
 class TestFusedLazyDocsChunks:

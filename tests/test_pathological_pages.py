@@ -8,7 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graphgen_spark.pipelines import run_kg_pipeline
+from graphgen_spark import synth
+from graphgen_spark.pipelines import (
+    alias_labels,
+    run_kg_pipeline,
+    run_mixed_kg_pipeline,
+)
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -85,3 +90,55 @@ class TestPathologicalPages:
             pathological_pages.repartition(7), out_col="t"
         ).select("url", "t").collect()}
         assert a == b
+
+
+def _triple_set(df):
+    return {tuple(r) for r in df.select("subj", "pred", "obj", "url")
+            .collect()}
+
+
+class TestEntryPointsAgree:
+    """Every KG entry point shares one records -> graph tail, so the
+    same pages give the same triples everywhere — self-loop page
+    included, with and without an alias dictionary."""
+
+    @pytest.mark.parametrize("with_dict", [False, True],
+                             ids=["no_dict", "dict"])
+    def test_same_graph_from_every_entry_point(
+        self, spark, pathological_pages, tmp_path, with_dict
+    ):
+        from graphgen_spark.operators.text import with_extracted_text
+        from graphgen_spark.pipelines.incremental import (
+            finalize_kg_state,
+            kg_state_from_records,
+        )
+        from graphgen_spark.pipelines.materialize import run_checkpointed
+
+        alias = synth.alias_dictionary_df(spark, 200) if with_dict else None
+        kw = {"alias_dict": alias, "chunk_size": 256, "chunk_overlap": 32}
+        composed = run_kg_pipeline(spark, pathological_pages, **kw)
+        want = _triple_set(composed["triples"])
+        assert want and all(s != o for s, _, o, _ in want)
+
+        fused = run_kg_pipeline(spark, pathological_pages, fused=True, **kw)
+        ckpt = run_checkpointed(
+            spark, pathological_pages, str(tmp_path / "ckpt"), **kw
+        )
+        docs = with_extracted_text(
+            pathological_pages, out_col="content"
+        ).select("url", F.lit("text").alias("type"), "content")
+        mixed = run_mixed_kg_pipeline(spark, docs, **kw)
+        assert _triple_set(fused["triples"]) == want
+        assert _triple_set(ckpt["triples"]) == want
+        assert _triple_set(mixed["triples"]) == want
+
+        labels = alias_labels(alias) if with_dict else None
+        state_edges = finalize_kg_state(
+            kg_state_from_records(composed["records"], labels)
+        )["edges"]
+
+        def pairs(edges):
+            return {tuple(r) for r in edges.select("src_id", "tgt_id")
+                    .collect()}
+
+        assert pairs(state_edges) == pairs(composed["edges"])

@@ -3,7 +3,6 @@ the applyInPandasWithState sessionizer (streaming counterpart of the
 batch events_sessions query)."""
 
 import datetime as dt
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,8 +61,11 @@ class TestWindowedCounts:
 
 
 class TestStatefulSessionizer:
-    def test_gap_closes_session_across_microbatches(self, spark, tmp_path):
-        land = tmp_path / "land_sess"
+    @staticmethod
+    def _run(spark, tmp_path, name, **kw):
+        """Two micro-batches through the sessionizer under an
+        availableNow trigger; the query must drain and stop."""
+        land = tmp_path / f"land_{name}"
         land.mkdir()
         # batch 1: two events 10s apart; batch 2: one event past the gap
         spark.createDataFrame(
@@ -77,12 +79,15 @@ class TestStatefulSessionizer:
             spark, str(land / "*"), max_files_per_trigger=1
         )
         q = (
-            sessionize_stream(stream, gap_sec=1800)
-            .writeStream.format("memory").queryName("sessions")
+            sessionize_stream(stream, gap_sec=1800, **kw)
+            .writeStream.format("memory").queryName(name)
             .outputMode("append").trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM sessions").collect()
+        assert q.awaitTermination(120) is True
+        return spark.sql(f"SELECT * FROM {name}").collect()
+
+    def test_gap_closes_session_across_microbatches(self, spark, tmp_path):
+        rows = self._run(spark, tmp_path, "sessions")
         closed = [
             r for r in rows
             if r["user_id"] == 1 and r["closed_by"] == "gap"
@@ -96,3 +101,18 @@ class TestStatefulSessionizer:
             r for r in rows
             if r["user_id"] == 2 and r["closed_by"] == "gap"
         ]
+
+    def test_watermark_past_gap_times_out_session(self, spark, tmp_path):
+        """With no late-data tolerance the watermark reaches 2000 s,
+        past user 2's last event + gap (5 + 1800 s): that session is
+        emitted by the event-time timeout; user 1's open session
+        (last event 2000 s) is not."""
+        rows = self._run(spark, tmp_path, "sessions_wm",
+                         watermark="0 seconds")
+        timed_out = [
+            (r["user_id"], r["n_events"]) for r in rows
+            if r["closed_by"] == "timeout"
+        ]
+        assert timed_out == [(2, 1)]
+        assert [(r["user_id"], r["n_events"]) for r in rows
+                if r["closed_by"] == "gap"] == [(1, 2)]

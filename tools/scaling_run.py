@@ -23,7 +23,11 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 from graphgen_spark import synth
-from graphgen_spark.pipelines import alias_labels, run_kg_pipeline
+from graphgen_spark.pipelines import (
+    alias_labels,
+    kg_pipeline,
+    run_kg_pipeline,
+)
 
 n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 40000
 n_ent = synth.n_entities_for(n_pages)
@@ -53,6 +57,15 @@ if not os.path.exists(labels_dir):
     )
     dict_prep = time.time() - t0
 
+# SPARK_GRAFT_LABEL_MAP_MAX_ROWS overrides the map-side linking guard
+# (default 2M label rows) so the JVM-join linking regime can be
+# measured at corpus sizes below its natural crossover — within-regime
+# per-page cost is the honest linearity comparison once a corpus step
+# crosses the guard (2.56M pages -> 2.56M label rows > 2M).  Set before
+# the warmup: the guard decision is kept per labels frame.
+kg_pipeline.LABEL_MAP_MAX_ROWS = int(os.environ.get(
+    "SPARK_GRAFT_LABEL_MAP_MAX_ROWS", kg_pipeline.LABEL_MAP_MAX_ROWS))
+
 # JVM/python-worker warmup on a tiny slice (identical at both levels)
 labels = spark.read.parquet(labels_dir)
 warm = run_kg_pipeline(
@@ -63,17 +76,10 @@ warm = run_kg_pipeline(
 warm["triples"].count()
 
 pages = spark.read.parquet(corpus_dir)
-# SPARK_GRAFT_LABEL_MAP_MAX_ROWS overrides the map-side linking guard
-# (default 2M label rows) so the JVM-join linking regime can be
-# measured at corpus sizes below its natural crossover — within-regime
-# per-page cost is the honest linearity comparison once a corpus step
-# crosses the guard (2.56M pages -> 2.56M label rows > 2M).
-lmmr = int(os.environ.get("SPARK_GRAFT_LABEL_MAP_MAX_ROWS", 2_000_000))
 t0 = time.time()
 out = run_kg_pipeline(
     spark, pages, chunk_size=512, chunk_overlap=64,
     precomputed_labels=labels, fused=True,
-    label_map_max_rows=lmmr,
 )
 n = out["triples"].count()
 steady = time.time() - t0
