@@ -45,9 +45,11 @@ from graphgen_spark.operators.text import with_extracted_text
 # (identical records; one extra shuffle-free stage).
 LABEL_MAP_MAX_ROWS = 2_000_000
 
-# labels frame -> its label-map broadcast (None past the size guard).
-# Keyed on the frame object itself (DataFrames hash by identity), so
-# an entry lives exactly as long as the caller's frame.
+# labels frame -> (row count, label-map broadcast or None if not yet
+# built).  Keyed on the frame object itself (DataFrames hash by
+# identity), so an entry lives exactly as long as the caller's frame;
+# the guard compares the kept count with LABEL_MAP_MAX_ROWS on every
+# call, so changing the threshold takes effect for frames already seen.
 _LABEL_MAP_BC: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -135,11 +137,13 @@ class _LazyFrames(dict):
     ~0.4 s of py4j round trips per run_kg_pipeline call (measured r7,
     half the driver-side build), and the most common consumers (the
     bench headline, triples-only batch callers) never touch them.
-    Any holistic access (iteration, keys/values/items, contains)
-    forces every pending entry first, so dict-like consumers — e.g.
+    Any holistic access (iteration, keys/values/items) forces every
+    pending entry first, so dict-like consumers — e.g.
     the config runner's save_output loop — see exactly the eager
-    dict.  (Only a raw C-level ``dict(out)`` copy would bypass the
-    overrides; no caller does that.)"""
+    dict.  Storing, deleting or clearing a key drops its pending
+    thunk, so an assigned value is never replaced by a later build.
+    (Only raw C-level copies — ``dict(out)``, ``out.copy()`` — and
+    ``popitem`` bypass the overrides; no caller uses them.)"""
 
     def __init__(self, base: dict):
         super().__init__(base)
@@ -166,10 +170,7 @@ class _LazyFrames(dict):
         return super().__contains__(k) or k in self._thunks
 
     def get(self, k, default=None):
-        if k in self:
-            self._force(k)
-            return super().__getitem__(k)
-        return default
+        return self[k] if k in self else default
 
     def __iter__(self):
         self._force_all()
@@ -189,6 +190,30 @@ class _LazyFrames(dict):
     def items(self):
         self._force_all()
         return super().items()
+
+    def __setitem__(self, k, v) -> None:
+        self._thunks.pop(k, None)
+        super().__setitem__(k, v)
+
+    def __delitem__(self, k) -> None:
+        if self._thunks.pop(k, None) is None:
+            super().__delitem__(k)
+
+    def pop(self, k, *default):
+        self._force(k)
+        return super().pop(k, *default)
+
+    def setdefault(self, k, default=None):
+        self._force(k)
+        return super().setdefault(k, default)
+
+    def update(self, *args, **kw) -> None:
+        for k, v in dict(*args, **kw).items():
+            self[k] = v
+
+    def clear(self) -> None:
+        self._thunks.clear()
+        super().clear()
 
 
 def records_to_graph(
@@ -230,17 +255,17 @@ def _label_map_broadcast(spark: SparkSession, labels: DataFrame):
     asset, so the count + collect + broadcast is computed once per
     frame (batch callers pass the same checkpointed frame per batch;
     re-running it per call cost ~0.2 s/batch)."""
-    if labels in _LABEL_MAP_BC:
-        return _LABEL_MAP_BC[labels]
-    bc = None
-    if labels.count() <= LABEL_MAP_MAX_ROWS:
+    n_rows, bc = _LABEL_MAP_BC.get(labels, (None, None))
+    if n_rows is None:
+        n_rows = labels.count()
+    if bc is None and n_rows <= LABEL_MAP_MAX_ROWS:
         lp = labels.select("alias_norm", "canonical_key").toPandas()
         bc = spark.sparkContext.broadcast(
             dict(zip(lp["alias_norm"].tolist(),
                      lp["canonical_key"].tolist()))
         )
-    _LABEL_MAP_BC[labels] = bc
-    return bc
+    _LABEL_MAP_BC[labels] = (n_rows, bc)
+    return bc if n_rows <= LABEL_MAP_MAX_ROWS else None
 
 
 def run_mixed_kg_pipeline(

@@ -120,7 +120,6 @@ SESSION_STATE_SCHEMA = "session_start double, last_ts double, n_events long"
 def sessionize_stream(
     events_stream: DataFrame,
     gap_sec: int = 1800,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user sessionization with a ``gap_sec`` inactivity gap — the
@@ -129,9 +128,11 @@ def sessionize_stream(
 
     State per user = (session_start, last_ts, n_events).  A session row
     is emitted when a later event closes it (closed_by='gap') or when
-    the event-time watermark (max event time minus ``watermark``, the
+    the event-time watermark (max event time minus a fixed 2 h
     late-data tolerance) passes ``last_ts + gap_sec`` (closed_by=
-    'timeout').  The timeout is in event time, so an
+    'timeout'; a session whose ``last_ts + gap_sec`` is already behind
+    the watermark — an out-of-order event that still passed the late
+    filter — closes at once).  The timeout is in event time, so an
     ``availableNow`` trigger drains: no-data batches run only while the
     watermark advances.  State is a 3-tuple per active user — bounded
     regardless of stream length."""
@@ -172,8 +173,13 @@ def sessionize_stream(
             else:
                 last = max(last, t)
                 n += 1
-        state.update((s0, last, n))
-        state.setTimeoutTimestamp(int(round((last + gap_sec) * 1000)))
+        timeout_ms = int(round((last + gap_sec) * 1000))
+        if timeout_ms < state.getCurrentWatermarkMs():
+            rows.append((user_id, s0, last, n, "timeout"))
+            state.remove()
+        else:
+            state.update((s0, last, n))
+            state.setTimeoutTimestamp(timeout_ms)
         yield pd.DataFrame(
             rows,
             columns=["user_id", "session_start", "session_end",
@@ -181,7 +187,7 @@ def sessionize_stream(
         )
 
     return (
-        events_stream.withWatermark("ts", watermark)
+        events_stream.withWatermark("ts", "2 hours")
         # epoch micros from the JVM: the timeout timestamp is compared
         # with the (epoch) watermark whatever the session time zone
         .withColumn("_ts_us", F.unix_micros("ts"))

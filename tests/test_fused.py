@@ -51,13 +51,17 @@ class TestLabelMapSizeGuard:
         collect and links via the JVM broadcast join in canonicalize —
         triples must be identical to the map-side-linked fused run."""
         pages = synth.pages_df(spark, 50, 200)
-        alias = synth.alias_dictionary_df(spark, 200)
+        labels = alias_labels(
+            synth.alias_dictionary_df(spark, 200)
+        ).localCheckpoint(eager=True)
         mapside = run_kg_pipeline(
-            spark, pages, alias_dict=alias,
+            spark, pages, precomputed_labels=labels,
             chunk_size=256, chunk_overlap=32, fused=True,
         )
+        assert kg_pipeline._label_map_broadcast(spark, labels) is not None
+        # the threshold is read on every call, also for a frame whose
+        # row count is already kept
         monkeypatch.setattr(kg_pipeline, "LABEL_MAP_MAX_ROWS", 0)
-        labels = alias_labels(alias).localCheckpoint(eager=True)
         guarded = run_kg_pipeline(
             spark, pages, precomputed_labels=labels,
             chunk_size=256, chunk_overlap=32, fused=True,
@@ -108,3 +112,17 @@ class TestFusedLazyDocsChunks:
         assert cf == cc
         # holistic access still sees every key, like a plain dict
         assert set(fused.keys()) == set(composed.keys())
+
+    def test_assigned_key_drops_pending_build(self):
+        """Storing a deferred key before reading it keeps the stored
+        value: the pending thunk is dropped, never run, and the key is
+        counted once."""
+        built = []
+        out = kg_pipeline._LazyFrames({"triples": 0})
+        out.defer(nodes=lambda: built.append("nodes") or 1)
+        out["nodes"] = 2
+        assert out["nodes"] == 2 and len(out) == 2 and not built
+        out.defer(edges=lambda: built.append("edges") or 3)
+        out.update(edges=4)
+        assert dict(out.items()) == {"triples": 0, "nodes": 2, "edges": 4}
+        assert not built

@@ -62,32 +62,33 @@ class TestWindowedCounts:
 
 class TestStatefulSessionizer:
     @staticmethod
-    def _run(spark, tmp_path, name, **kw):
-        """Two micro-batches through the sessionizer under an
-        availableNow trigger; the query must drain and stop."""
+    def _run(spark, tmp_path, name, files):
+        """One micro-batch per landed file through the sessionizer
+        under an availableNow trigger; the query must drain and stop."""
         land = tmp_path / f"land_{name}"
         land.mkdir()
-        # batch 1: two events 10s apart; batch 2: one event past the gap
-        spark.createDataFrame(
-            [_ev(0, 0, 1), _ev(1, 10, 1), _ev(2, 5, 2)], COLS
-        ).coalesce(1).write.parquet(str(land / "f1"))
-        spark.createDataFrame(
-            [_ev(3, 2000, 1)], COLS
-        ).coalesce(1).write.parquet(str(land / "f2"))
-
+        for i, rows in enumerate(files):
+            spark.createDataFrame(rows, COLS).coalesce(1).write.parquet(
+                str(land / f"f{i}")
+            )
         stream = read_events_stream(
             spark, str(land / "*"), max_files_per_trigger=1
         )
         q = (
-            sessionize_stream(stream, gap_sec=1800, **kw)
+            sessionize_stream(stream, gap_sec=1800)
             .writeStream.format("memory").queryName(name)
             .outputMode("append").trigger(availableNow=True).start()
         )
         assert q.awaitTermination(120) is True
         return spark.sql(f"SELECT * FROM {name}").collect()
 
+    # batch 1: user 1 has two events 10 s apart, user 2 one event
+    FIRST = [_ev(0, 0, 1), _ev(1, 10, 1), _ev(2, 5, 2)]
+
     def test_gap_closes_session_across_microbatches(self, spark, tmp_path):
-        rows = self._run(spark, tmp_path, "sessions")
+        # batch 2: one user-1 event past the gap
+        rows = self._run(spark, tmp_path, "sessions",
+                         [self.FIRST, [_ev(3, 2000, 1)]])
         closed = [
             r for r in rows
             if r["user_id"] == 1 and r["closed_by"] == "gap"
@@ -103,16 +104,21 @@ class TestStatefulSessionizer:
         ]
 
     def test_watermark_past_gap_times_out_session(self, spark, tmp_path):
-        """With no late-data tolerance the watermark reaches 2000 s,
-        past user 2's last event + gap (5 + 1800 s): that session is
-        emitted by the event-time timeout; user 1's open session
-        (last event 2000 s) is not."""
-        rows = self._run(spark, tmp_path, "sessions_wm",
-                         watermark="0 seconds")
-        timed_out = [
+        """Batch 2 moves the watermark (max event time - 2 h) to
+        12800 s, past user 2's last event + gap (5 + 1800 s): that
+        session is emitted by the event-time timeout.  Batch 3 holds an
+        out-of-order event at 100 s for a new user 3; it passes the
+        late-data filter (the previous batch's watermark), but its
+        last + gap (1900 s) is already behind the current watermark, so
+        it is closed at once instead of setting a timeout in the past.
+        User 1's open session (last event 20000 s) is not emitted."""
+        rows = self._run(spark, tmp_path, "sessions_wm", [
+            self.FIRST, [_ev(3, 20000, 1)], [_ev(4, 100, 3)],
+        ])
+        timed_out = sorted(
             (r["user_id"], r["n_events"]) for r in rows
             if r["closed_by"] == "timeout"
-        ]
-        assert timed_out == [(2, 1)]
+        )
+        assert timed_out == [(2, 1), (3, 1)]
         assert [(r["user_id"], r["n_events"]) for r in rows
                 if r["closed_by"] == "gap"] == [(1, 2)]

@@ -61,8 +61,7 @@ if not os.path.exists(labels_dir):
 # (default 2M label rows) so the JVM-join linking regime can be
 # measured at corpus sizes below its natural crossover — within-regime
 # per-page cost is the honest linearity comparison once a corpus step
-# crosses the guard (2.56M pages -> 2.56M label rows > 2M).  Set before
-# the warmup: the guard decision is kept per labels frame.
+# crosses the guard (2.56M pages -> 2.56M label rows > 2M).
 kg_pipeline.LABEL_MAP_MAX_ROWS = int(os.environ.get(
     "SPARK_GRAFT_LABEL_MAP_MAX_ROWS", kg_pipeline.LABEL_MAP_MAX_ROWS))
 
