@@ -11,15 +11,90 @@ reading the table back; the lineage map is a (src_id, dst_id, op)
 table; per-partition progress metrics are recorded after each append.
 Everything is idempotent because ids are content hashes — a mid-run
 kill leaves a valid (partial) table that the next run tops up.
+
+Writes that nothing later in a commit reads (manifests, metrics,
+final tables, lineage) go through ``OffPathWrites``: they run on a
+small fixed thread pool beside the caller, so Spark schedules their
+tiny jobs side by side instead of one after another.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextvars import ContextVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+# Threads running one commit's off-path writes.  A write's jobs are
+# tiny (a few tasks each), so a handful of concurrent writes is enough
+# to keep local[N] cores busy.
+WRITE_THREADS = 4
+# the OffPathWrites block open on this thread, if any
+_OPEN: ContextVar[OffPathWrites | None] = ContextVar(
+    "off_path_writes", default=None
+)
+
+# a parquet write prepared on the caller thread: writer.parquet(path)
+Write = tuple[DataFrameWriter, str]
+
+
+class OffPathWrites:
+    """Context manager for the writes of one commit that nothing later
+    in the commit reads.
+
+    ``submit`` queues writes on the block's pool of WRITE_THREADS
+    threads; leaving the block waits for every queued write and then
+    re-raises the first failure (in submission order) — unless the
+    block itself raised, whose error wins.  Plans and writers are built
+    by the caller; a pool thread only runs ``writer.parquet(path)``,
+    under the job group and job description the caller had when it
+    submitted.  While the block is open on a thread,
+    ``checkpoint_stage`` sends its metrics write here.
+    """
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._futures: list = []
+
+    def submit(self, *writes: Write) -> None:
+        """Run ``writes`` one after another in one pool task: writes into
+        one table directory must not overlap, so they share a task."""
+
+        def run() -> None:
+            for writer, path in writes:
+                writer.parquet(path)
+
+        target = inheritable_thread_target(self._spark)(run)
+        self._futures.append(self._pool.submit(target))
+
+    def __enter__(self) -> OffPathWrites:
+        self._pool = ThreadPoolExecutor(
+            WRITE_THREADS, thread_name_prefix="off-path-write"
+        )
+        self._token = _OPEN.set(self)
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        _OPEN.reset(self._token)
+        self._pool.shutdown(wait=True)
+        errors = [f.exception() for f in self._futures]
+        first = next((e for e in errors if e is not None), None)
+        if exc is None and first is not None:
+            raise first
+
+
+def _write_off_path(write: Write) -> None:
+    """Queue ``write`` on the open OffPathWrites block, or run it now."""
+    writes = _OPEN.get()
+    if writes is None:
+        writer, path = write
+        writer.parquet(path)
+    else:
+        writes.submit(write)
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -41,10 +116,15 @@ def checkpoint_stage(
 
     - first run: write everything
     - resume: left-anti join on ``key_cols`` → append only new rows
+
+    The table is read with ``df``'s schema (no schema-inference job);
+    the metrics write goes off path when an OffPathWrites block is open.
     """
     path = os.path.join(root, stage)
     if _exists(spark, path):
-        done_keys = spark.read.parquet(path).select(*key_cols)
+        done_keys = spark.read.schema(df.select(*key_cols).schema).parquet(
+            path
+        )
         new_rows = df.join(done_keys, key_cols, "left_anti")
         writer = new_rows.write.mode("append")
         if partition_by:
@@ -55,7 +135,7 @@ def checkpoint_stage(
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(path)
-    result = spark.read.parquet(path)
+    result = spark.read.schema(df.schema).parquet(path)
     _record_metrics(spark, result, root, stage)
     return result
 
@@ -71,8 +151,8 @@ def _record_metrics(
         .withColumn("stage", F.lit(stage))
         .withColumn("recorded_at", F.lit(int(time.time())).cast("long"))
     )
-    metrics.write.mode("append").parquet(
-        os.path.join(root, "_metrics", stage)
+    _write_off_path(
+        (metrics.write.mode("append"), os.path.join(root, "_metrics", stage))
     )
 
 
@@ -93,25 +173,24 @@ def lineage_edges(
     ).distinct().withColumn("op", F.lit(op))
 
 
-def append_lineage(
-    spark: SparkSession, lineage: DataFrame, root: str
-) -> None:
-    lineage.write.mode("append").partitionBy("op").parquet(
-        os.path.join(root, "lineage")
+def append_lineage(lineage: DataFrame, root: str) -> Write:
+    """The write that appends ``lineage`` under ``root/lineage``."""
+    return (
+        lineage.write.mode("append").partitionBy("op"),
+        os.path.join(root, "lineage"),
     )
 
 
-def overwrite_lineage(
-    spark: SparkSession, lineage: DataFrame, root: str, op: str
-) -> None:
-    """Replace one op's lineage partition.  For lineage derived from a
-    FULL table (e.g. chunk→triple from the whole triples table) an
-    append would duplicate rows on every resume/no-op re-run; the
-    partition directory is rewritten instead (read-back still recovers
-    ``op`` from the directory name)."""
-    lineage.where(F.col("op") == op).drop("op").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "lineage", f"op={op}"))
+def overwrite_lineage(lineage: DataFrame, root: str, op: str) -> Write:
+    """The write that replaces one op's lineage partition.  For lineage
+    derived from a FULL table (e.g. chunk→triple from the whole triples
+    table) an append would duplicate rows on every resume/no-op re-run;
+    the partition directory is rewritten instead (read-back still
+    recovers ``op`` from the directory name)."""
+    return (
+        lineage.where(F.col("op") == op).drop("op").write.mode("overwrite"),
+        os.path.join(root, "lineage", f"op={op}"),
+    )
 
 
 def observed(df: DataFrame, name: str) -> DataFrame:

@@ -180,8 +180,10 @@ def finalize_nodes(
 
 def finalize_edges(edge_aggs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Mergeable edge state -> final edges table; endpoints must both
-    exist in nodes (left-semi joins, broadcast by AQE when the node
-    side is small)."""
+    be an ``entity_name`` of ``nodes`` (left-semi joins, broadcast by
+    AQE when that side is small).  Only that column is read, so any
+    frame with the node names works: the nodes table, the node state,
+    or the entities the nodes are merged from."""
     node_names = nodes.select(F.col("entity_name").alias("_nn"))
     desc, length = _gated_description(F.array_join("descs", SEP))
     return (
@@ -210,7 +212,13 @@ def merge_nodes(entities: DataFrame) -> DataFrame:
 
 def merge_edges(relations: DataFrame, nodes: DataFrame) -> DataFrame:
     """relations(src_id, tgt_id, description, source_id) + nodes ->
-    edges(src_id, tgt_id, description, source_ids, length)."""
+    edges(src_id, tgt_id, description, source_ids, length).
+
+    ``nodes`` may be any frame with an ``entity_name`` column: edges
+    keep the relations whose endpoints both appear there.  merge_nodes
+    emits exactly one node per distinct entity_name, so passing the
+    entities gives the same edges as passing their merged nodes,
+    without building the node aggregation."""
     return finalize_edges(
         _capped_aggs(relations, ["src_id", "tgt_id"]), nodes
     )

@@ -103,9 +103,12 @@ def finalize_kg_state(
 ) -> dict[str, DataFrame]:
     """Mergeable state -> final nodes/edges tables (summary gate,
     token length, majority type, endpoint semi-join) — identical
-    output to merge_nodes/merge_edges over the union of all batches."""
+    output to merge_nodes/merge_edges over the union of all batches.
+    Edge endpoints are checked against the node state's names (one
+    row per node), the same rule records_to_graph applies to the
+    entities."""
     nodes = finalize_nodes(state["node_aggs"], state["node_types"])
-    edges = finalize_edges(state["edge_aggs"], nodes)
+    edges = finalize_edges(state["edge_aggs"], state["node_aggs"])
     return {"nodes": nodes, "edges": edges}
 
 

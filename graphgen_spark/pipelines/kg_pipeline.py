@@ -137,6 +137,8 @@ class _LazyFrames(dict):
     ~0.4 s of py4j round trips per run_kg_pipeline call (measured r7,
     half the driver-side build), and the most common consumers (the
     bench headline, triples-only batch callers) never touch them.
+    Each entry is built on its own: ``edges`` needs only the entities,
+    so accessing it does not force ``nodes``.
     Any holistic access (iteration, keys/values/items) forces every
     pending entry first, so dict-like consumers — e.g.
     the config runner's save_output loop — see exactly the eager
@@ -241,9 +243,12 @@ def records_to_graph(
         "relations": relations,
         "triples": triples,
     })
+    # edges semi-join on the entity names, not the nodes plan: nodes
+    # hold exactly one row per distinct entity_name, so the endpoint
+    # set is the same and building edges never forces nodes
     out.defer(
         nodes=lambda: merge_nodes(entities),
-        edges=lambda: merge_edges(relations, out["nodes"]),
+        edges=lambda: merge_edges(relations, entities),
     )
     return out
 

@@ -97,6 +97,10 @@ def _triple_set(df):
             .collect()}
 
 
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
 class TestEntryPointsAgree:
     """Every KG entry point shares one records -> graph tail, so the
     same pages give the same triples everywhere — self-loop page
@@ -131,6 +135,18 @@ class TestEntryPointsAgree:
         assert _triple_set(fused["triples"]) == want
         assert _triple_set(ckpt["triples"]) == want
         assert _triple_set(mixed["triples"]) == want
+
+        # the checkpointed nodes / edges tables (written concurrently,
+        # edges semi-joined on entity names) match both in-memory builds
+        for name, cols in (
+            ("nodes", ["entity_name", "entity_type", "description",
+                       "n_mentions"]),
+            ("edges", ["src_id", "tgt_id", "description", "n_mentions"]),
+        ):
+            committed = _rows(ckpt[name], cols)
+            assert committed, name
+            assert _rows(composed[name], cols) == committed, name
+            assert _rows(fused[name], cols) == committed, name
 
         labels = alias_labels(alias) if with_dict else None
         state_edges = finalize_kg_state(
