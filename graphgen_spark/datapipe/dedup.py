@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from graphgen_spark.operators.components import connected_components
+from graphgen_spark.operators.components import connected_components_long
 
 # Persisted intermediates (shingle postings, signature tables, LSH
 # buckets) are registered here so long-lived sessions can release the
@@ -609,36 +609,24 @@ def minhash_lsh_dedup(
     round 5); default ``None`` keeps the oracle-checked behavior.
 
     Returns (doc_id, group_id, keep)."""
-    # the verified pair table feeds the CC wrapper's vertex set, edge
-    # list and gate count — persist it (r7) so the fixpoint/fast-path
-    # actions read one cached droplet instead of re-running the
-    # candidates x doc_sets scoring join per action (and repeated
-    # dedup calls in one session reuse it via the plan cache, exactly
-    # like the signature/bucket intermediates above)
+    # persisted (r7): the CC gate's count and collect (or the
+    # fixpoint's reads, past the gate) each read one cached droplet
+    # instead of re-running the candidates x doc_sets scoring join per
+    # action, and repeated dedup calls in one session reuse it via the
+    # plan cache, exactly like the signature/bucket intermediates above
     verified = _persist(minhash_verified_pairs(
         docs, text_col, id_col, n, num_perm, bands, threshold, seed,
         bucket_cap=bucket_cap,
     ))
 
-    # group verified pairs into components; keep = NUMERIC min doc_id.
-    # connected_components labels by lexicographic-min string name, so
-    # the numeric group representative is recomputed with a per-
-    # component min over the long ids (doc ids must be integral).
-    labels = connected_components(
-        verified.select(
-            F.col("a").cast("string").alias("src_id"),
-            F.col("b").cast("string").alias("tgt_id"),
-        ),
+    # group verified pairs into components over the long doc ids:
+    # component = min member doc_id, the group representative
+    groups = connected_components_long(
+        verified.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         assume_materialized=True,
+    ).select(
+        F.col("id").alias("doc_id"), F.col("component").alias("group_id")
     )
-    members = labels.select(
-        F.col("name").cast("long").alias("doc_id"),
-        F.col("component_name").alias("comp"),
-    )
-    group_min = members.groupBy("comp").agg(
-        F.min("doc_id").alias("group_id")
-    )
-    groups = members.join(group_min, "comp").select("doc_id", "group_id")
     all_docs = docs.select(F.col(id_col).alias("doc_id"))
     return (
         all_docs.join(groups, "doc_id", "left")

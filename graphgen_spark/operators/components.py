@@ -1,18 +1,30 @@
-"""Connected components as iterative DataFrame joins (GraphFrames-style
-alternating large-star / small-star, Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14).
+"""Connected components: a driver union-find for small graphs, else
+iterative DataFrame joins (GraphFrames-style alternating large-star /
+small-star, Kiveris et al., "Connected Components in MapReduce and
+Beyond", SoCC'14).
 
 Replaces the reference's single-process NetworkX
 ``nx.connected_components`` (``storage/graph/networkx_storage.py:28-37``)
-and Kuzu union-find (``storage/graph/kuzu_storage.py:120-150``) with an
-O(log n)-round distributed fixpoint: every round is two hash shuffles
-(groupBy min + join), lineage is cut with ``localCheckpoint`` each
-round so plans stay bounded, and convergence is checked with a cheap
-count+hash aggregate.
+and Kuzu union-find (``storage/graph/kuzu_storage.py:120-150``).
 
-String vertex ids are mapped to int64 via xxhash64 (collision odds are
-~n²/2⁶⁵ — negligible for entity vocabularies; document ids never enter
-the graph).
+Both entry points — ``connected_components_long`` over int64 ids and
+the string wrapper ``connected_components`` — take ONE gate
+(``_small_graph_labels``) over their materialized input.  At or below
+``DRIVER_CC_MAX_EDGES`` input rows it collects the edges once, runs
+``_driver_union_find`` on them (over names, for the wrapper) and hands
+the labels back as one Arrow batch.  The collect is bounded by facts:
+when the Catalyst size statistic says the input is tiny the gate skips
+its ``count()`` but collects through ``limit(gate + 1)``, so a
+misestimated input never brings more than gate + 1 rows to the driver.
+
+Past the gate runs an O(log n)-round distributed fixpoint: every round
+is two hash shuffles (groupBy min + join), lineage is cut with
+``localCheckpoint`` each round so plans stay bounded, and convergence
+is checked with a cheap count+hash aggregate.  Only the string
+wrapper's fixpoint hashes: names map to int64 via xxhash64 (collision
+odds are ~n²/2⁶⁵ — negligible for entity vocabularies) and are
+re-attached with a min-name representative.  Document ids stay int64
+end to end (dedup calls the long path directly).
 """
 
 from __future__ import annotations
@@ -80,28 +92,30 @@ def _signature(e: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-# Below this edge count the whole graph fits comfortably on the
+# Below this many input rows the whole graph fits comfortably on the
 # driver (200k edges ≈ 3 MB of int64 pairs) and a local union-find
 # replaces ~O(log n) fixpoint rounds x 2 shuffles each — the dominant
 # cost for small graphs is pure job-scheduling latency.  The
-# distributed fixpoint below remains the scale path; set
-# driver_max_edges=0 to force it.
+# distributed fixpoint below remains the scale path; set it to 0 to
+# force the fixpoint.  Read at call time.
 DRIVER_CC_MAX_EDGES = 200_000
+
+# large/small-star rounds before the fixpoint stops unconverged
+_MAX_ITER = 25
 
 
 def _stats_prove_small(df: DataFrame, bound: int = 8 << 20) -> bool:
-    """True when the Catalyst size statistic PROVES ``df`` is tiny
-    (known statistics at or under ``bound`` bytes) — lets the driver
-    fast paths below collect directly and skip their gate ``count()``
-    job (~0.15-0.3 s of per-call job latency; the alias-dictionary CC
-    pays it on every dict-prep).  Unknown statistics default to
-    ``defaultSizeInBytes`` (astronomically large), so this can only
-    fire for materialized/well-estimated inputs; the row gate is still
-    enforced on the collected length, so the only possible waste is a
-    bounded (≤ ``bound``-byte) collect that then falls through to the
-    distributed path — never a wrong result, never an unbounded
-    collect.  Same decide-from-free-driver-statistics pattern as the
-    simhash kernel crossover (dedup.py)."""
+    """True when the Catalyst size statistic says ``df`` is tiny (known
+    statistics at or under ``bound`` bytes) — lets the driver gate
+    below skip its ``count()`` job (~0.15-0.3 s of per-call job
+    latency; the alias-dictionary CC pays it on every dict-prep).
+    Unknown statistics default to ``defaultSizeInBytes``
+    (astronomically large), so this only fires for materialized or
+    well-estimated inputs.  It is still an estimate — a
+    ``localCheckpoint`` of an ``explode`` reports 32 B for 600k rows —
+    so the caller bounds its collect with ``limit(gate + 1)``, never
+    with this statistic.  Same decide-from-free-driver-statistics
+    pattern as the simhash kernel crossover (dedup.py)."""
     try:
         return (
             int(
@@ -118,7 +132,8 @@ def _stats_prove_small(df: DataFrame, bound: int = 8 << 20) -> bool:
 
 def _driver_union_find(pairs: list) -> list:
     """Local union-find with minimum-id representative — identical
-    labels to the distributed fixpoint (component = min member id)."""
+    labels to the distributed fixpoint (component = min member id).
+    Self-loop pairs label their vertex with itself."""
     parent: dict = {}
 
     def find(x):
@@ -144,80 +159,69 @@ def _driver_union_find(pairs: list) -> list:
     return [(i, find(i)) for i in ids]
 
 
-def connected_components_long(
-    edges: DataFrame, max_iter: int = 25, partitions: int | None = None,
-    assume_materialized: bool = False,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-) -> DataFrame:
-    """edges(src int64, dst int64) -> labels(id int64, component int64)
-    where component is the minimum member id.  Covers every vertex that
-    appears in any edge (callers union in isolated vertices).
+def _small_graph_labels(
+    edges: DataFrame,
+) -> tuple[DataFrame | None, int | None]:
+    """The one driver gate: materialized (src, dst) edges of one key
+    type -> ``(labels(id, component), None)`` when the input has at
+    most ``DRIVER_CC_MAX_EDGES`` rows, else ``(None, n)`` where ``n``
+    is the exact row count if the gate counted it (``None`` if the
+    bounded collect overflowed first), so the fixpoint never repeats
+    the gate's count or collect.
 
-    ``partitions`` sizes the fixpoint's shuffles: pass ~|E|/2M for big
-    graphs; when None a cheap count picks it (small inputs collapse to
-    a handful of partitions so the iteration isn't job-overhead-bound).
+    The gate counts input rows, duplicates and self-loops included
+    (both callers' inputs are already distinct).  Self-loop-only
+    vertices label themselves inside the union-find, so the labels
+    cover every vertex without a vertex-set join."""
+    gate = DRIVER_CC_MAX_EDGES
+    # NOTE: limit(gate+1).collect() only runs when the input is proven
+    # small: Spark executes a global limit over an unmaterialized plan
+    # by funneling the whole upstream into ONE partition — measured
+    # 60 s+ on the sf0.1 KG edge table.  Otherwise the parallel count
+    # gates the collect.
+    if _stats_prove_small(edges):
+        rows = edges.limit(gate + 1).collect()
+        if len(rows) > gate:
+            return None, None
+    else:
+        n_edges = edges.count()
+        if n_edges > gate:
+            return None, n_edges
+        rows = edges.collect()
+    labels = _driver_union_find([(r[0], r[1]) for r in rows])
+    # hand the local label list to the JVM as ONE Arrow batch via
+    # pandas: the plain-list path converts pickled rows one by one
+    # (measured ~1.4 s for an 8k-row label table vs ~0.1 s Arrow)
+    import pandas as pd
 
-    The input plan is referenced by three branches (vertex set,
-    canonical edges, partition count) — it is checkpointed ONCE up
-    front so an expensive upstream (e.g. LSH candidate verification)
-    never re-executes per branch.  Pass ``assume_materialized=True``
-    when the caller already checkpointed/persisted it.
-    """
-    if not assume_materialized:
-        edges = edges.localCheckpoint(eager=True)
+    key = edges.schema[0].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame(labels, columns=["id", "component"]),
+        f"id {key}, component {key}",
+    ), None
+
+
+def _fixpoint(edges: DataFrame, n_edges: int | None) -> DataFrame:
+    """Large/small-star fixpoint: materialized edges(src, dst int64)
+    -> labels(id, component = min member id) covering every vertex
+    that appears in any edge.  ``n_edges`` (the input row count, when
+    known) sizes the shuffles: small inputs collapse to a handful of
+    partitions so the iteration isn't job-overhead-bound."""
+    if n_edges is None:
+        n_edges = edges.count()
+    partitions = max(2, min(256, n_edges // 500_000 + 2))
     vertices = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    e = _canonical_edges(edges)
-    # NOTE: a limit(gate+1).collect() probe would be one job instead
-    # of count+collect, but Spark executes a global limit by funneling
-    # the whole upstream into ONE partition — measured 60 s+ on the
-    # sf0.1 KG edge table.  The parallel count stays — except when the
-    # input's free Catalyst statistic already proves it tiny, where we
-    # collect directly and enforce the SAME row gate on len().
-    pairs = n_edges = None
-    if driver_max_edges and _stats_prove_small(edges):
-        cand = [(r["src"], r["dst"]) for r in e.collect()]
-        if len(cand) <= driver_max_edges:
-            pairs = cand
-        else:
-            n_edges = len(cand)  # exact count, free from the collect
-    if pairs is None and n_edges is None:
-        n_edges = e.count()
-        if n_edges <= driver_max_edges:
-            pairs = [(r["src"], r["dst"]) for r in e.collect()]
-    if pairs is not None:
-        # small graph: local union-find (same min-id labels), one job
-        labels = _driver_union_find(pairs)
-        spark = edges.sparkSession
-        # hand the local label list to the JVM as ONE Arrow batch via
-        # pandas: the plain-list path converts pickled rows one by one
-        # (measured ~1.4 s for an 8k-row label table vs ~0.1 s Arrow;
-        # identical rows/schema, content-only difference is zero)
-        import pandas as pd
-
-        lab_df = (
-            spark.createDataFrame(
-                pd.DataFrame(labels, columns=["id", "component"]),
-                "id long, component long",
-            )
-            if labels
-            else spark.createDataFrame([], "id long, component long")
-        )
-        return (
-            vertices.join(lab_df, "id", "left")
-            .select(
-                "id",
-                F.coalesce("component", F.col("id")).alias("component"),
-            )
-        )
-    if partitions is None:
-        partitions = max(2, min(256, n_edges // 500_000 + 2))
-    e = e.repartition(partitions, "src").localCheckpoint(eager=True)
+    e = (
+        _canonical_edges(edges)
+        .repartition(partitions, "src")
+        .localCheckpoint(eager=True)
+    )
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         e = _large_star(e)
         e = (
             _small_star(e)
@@ -239,96 +243,77 @@ def connected_components_long(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src_col: str = "src_id",
-    dst_col: str = "tgt_id",
-    max_iter: int = 25,
-    partitions: int | None = None,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-    assume_materialized: bool = False,
+def connected_components_long(
+    edges: DataFrame, assume_materialized: bool = False,
 ) -> DataFrame:
-    """String-keyed wrapper: edges(src_col, dst_col string) ->
+    """edges(src int64, dst int64) -> labels(id int64, component int64)
+    where component is the minimum member id.  Covers every vertex that
+    appears in any edge (callers union in isolated vertices).
+
+    The gate and the fixpoint both read the input more than once, so
+    it is checkpointed ONCE up front and an expensive upstream (e.g.
+    LSH candidate verification) never re-executes per read.  Pass
+    ``assume_materialized=True`` when the caller already
+    checkpointed/persisted it.
+    """
+    edges = edges.select("src", "dst")
+    if not assume_materialized:
+        edges = edges.localCheckpoint(eager=True)
+    labels, n_edges = _small_graph_labels(edges)
+    return labels if labels is not None else _fixpoint(edges, n_edges)
+
+
+def connected_components(
+    edges: DataFrame, assume_materialized: bool = False,
+) -> DataFrame:
+    """String-keyed wrapper: edges(src_id, tgt_id string) ->
     (name string, component int64, component_name string) where
     component_name is the lexicographically-minimal member name (a
     deterministic canonical representative).
 
-    The input is checkpointed once: the name table, the hashed edge
-    list, and the fixpoint all branch from it, and the upstream plan
-    (candidate generation + verification in the dedup callers) must
-    not re-execute per branch.  ``assume_materialized=True`` skips
-    that checkpoint when the caller already landed the edge table."""
-    edges = edges.select(src_col, dst_col)
+    Below the gate the union-find runs on the names themselves (the
+    min-id representative IS the min name).  Past it the names are
+    hashed to int64 for the fixpoint and re-attached (a fixpoint over
+    the strings themselves measured 15.4-16.1 s against 11.6-13.9 s
+    hashed, on a 200k-edge graph at 4 vCPUs).  ``component`` is
+    xxhash64(component_name) on BOTH sides of the gate, so the numeric
+    label is stable across the threshold and matches the
+    xxhash64(entity_name) singleton fallback consumers use for
+    isolated nodes.
+
+    The input is checkpointed once unless ``assume_materialized``
+    (see ``connected_components_long``)."""
+    edges = edges.select(
+        F.col("src_id").alias("src"), F.col("tgt_id").alias("dst")
+    )
     if not assume_materialized:
         edges = edges.localCheckpoint(eager=True)
-    if driver_max_edges:
-        # small-graph fast path at the STRING level: one count + one
-        # collect, union-find on names (min-name representative ==
-        # component_name), zero joins/shuffles downstream.  The join
-        # formulation below cost ~7 s of pure job-scheduling latency
-        # for a 6k-edge alias dictionary at local[32].  `component` is
-        # xxhash64(component_name) on BOTH sides of the gate (the
-        # distributed path re-derives it after computing reps), so the
-        # numeric label is stable across the threshold and matches the
-        # xxhash64(entity_name) singleton fallback consumers use for
-        # isolated nodes.
-        pairs = None
-        if _stats_prove_small(edges):
-            cand = [(r[0], r[1]) for r in edges.collect()]
-            if len(cand) <= driver_max_edges:
-                pairs = cand
-        elif edges.count() <= driver_max_edges:
-            pairs = [(r[0], r[1]) for r in edges.collect()]
-        if pairs is not None:
-            labels = _driver_union_find(pairs)
-            spark = edges.sparkSession
-            # one Arrow batch via pandas, not per-row pickled
-            # conversion — see the long-path note above
-            import pandas as pd
-
-            lab_df = (
-                spark.createDataFrame(
-                    pd.DataFrame(
-                        labels, columns=["name", "component_name"]
-                    ),
-                    "name string, component_name string",
-                )
-                if labels
-                else spark.createDataFrame(
-                    [], "name string, component_name string"
-                )
-            )
-            return lab_df.select(
-                "name",
-                F.xxhash64("component_name").alias("component"),
-                "component_name",
-            )
-    ids = (
-        edges.select(F.col(src_col).alias("name"))
-        .union(edges.select(F.col(dst_col).alias("name")))
-        .distinct()
-        .withColumn("id", F.xxhash64("name"))
-    )
-    e_long = (
-        edges.select(
-            F.xxhash64(src_col).alias("src"), F.xxhash64(dst_col).alias("dst")
+    labels, n_edges = _small_graph_labels(edges)
+    if labels is not None:
+        named = labels.select(
+            F.col("id").alias("name"),
+            F.col("component").alias("component_name"),
         )
-    )
-    labels = connected_components_long(
-        e_long, max_iter=max_iter, partitions=partitions,
-        assume_materialized=True, driver_max_edges=driver_max_edges,
-    )
-    named = ids.join(labels, "id").select("name", "component")
-    reps = named.groupBy("component").agg(
-        F.min("name").alias("component_name")
-    )
-    # one id space for BOTH paths: component = xxhash64 of the min
-    # member NAME (what the driver fast path above emits), not the min
-    # member HASH — otherwise the same graph gets different numeric
-    # labels depending on which side of the driver_max_edges gate it
-    # lands on, and any consumer persisting `component` across runs
-    # that straddle the threshold sees labels change
-    return named.join(reps, "component").select(
+    else:
+        ids = (
+            edges.select(F.col("src").alias("name"))
+            .union(edges.select(F.col("dst").alias("name")))
+            .distinct()
+            .withColumn("id", F.xxhash64("name"))
+        )
+        hashed = edges.select(
+            F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
+        )
+        members = ids.join(_fixpoint(hashed, n_edges), "id").select(
+            "name", "component"
+        )
+        reps = members.groupBy("component").agg(
+            F.min("name").alias("component_name")
+        )
+        named = members.join(reps, "component").select(
+            "name", "component_name"
+        )
+    return named.select(
         "name",
         F.xxhash64("component_name").alias("component"),
         "component_name",

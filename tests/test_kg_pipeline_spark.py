@@ -347,12 +347,25 @@ class TestCCHybridPaths:
     """The size-gated driver union-find must produce IDENTICAL labels
     to the distributed large-star/small-star fixpoint."""
 
-    def test_paths_agree_on_random_graph(self, spark):
+    @staticmethod
+    def _record_collects(monkeypatch, df):
+        """Row counts of every DataFrame.collect() from here on."""
+        cls = type(df)
+        orig = cls.collect
+        sizes = []
+
+        def collect(self):
+            rows = orig(self)
+            sizes.append(len(rows))
+            return rows
+
+        monkeypatch.setattr(cls, "collect", collect)
+        return sizes
+
+    def test_paths_agree_on_random_graph(self, spark, monkeypatch):
         import random
 
-        from graphgen_spark.operators.components import (
-            connected_components,
-        )
+        import graphgen_spark.operators.components as C
 
         rng = random.Random(7)
         edges = [
@@ -364,22 +377,47 @@ class TestCCHybridPaths:
         # component = xxhash64(component_name), one shared id space
         local = {
             (r["name"], r["component"], r["component_name"])
-            for r in connected_components(df).collect()
+            for r in C.connected_components(df).collect()
         }
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
         distributed = {
             (r["name"], r["component"], r["component_name"])
-            for r in connected_components(
-                df, driver_max_edges=0
-            ).collect()
+            for r in C.connected_components(df).collect()
         }
         assert local == distributed and len(local) > 0
+
+    def test_long_paths_agree(self, spark, monkeypatch):
+        """The long entry point's driver path (no vertex-set join) and
+        its forced fixpoint return the same (id, component) rows over
+        duplicate edges, both orientations, a self-loop-only vertex
+        and an isolated pair."""
+        import graphgen_spark.operators.components as C
+
+        edges = [
+            (1, 2), (2, 1), (1, 2),  # duplicates, both orientations
+            (3, 2), (5, 4), (4, 3),  # chain 1-2-3-4-5
+            (7, 7),  # self-loop-only vertex
+            (900, 800),  # isolated pair, larger id first
+            (-6, 5),  # negative ids join the chain
+        ]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        local = {tuple(r) for r in C.connected_components_long(df).collect()}
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
+        distributed = {
+            tuple(r) for r in C.connected_components_long(df).collect()
+        }
+        assert local == distributed
+        assert local == {
+            (i, -6) for i in (-6, 1, 2, 3, 4, 5)
+        } | {(7, 7), (800, 800), (900, 800)}
 
     def test_stats_gate_matches_count_gate(self, spark, monkeypatch):
         """r7: a materialized tiny input lets the fast path skip the
         gate count() (collect-first, row gate enforced on len) — the
         labels must be identical to the count-gated path, and a
         stats-small input whose ROWS exceed the gate must still fall
-        through to the distributed fixpoint with identical labels."""
+        through to the distributed fixpoint with identical labels,
+        bringing the edge rows to the driver at most once."""
         import graphgen_spark.operators.components as C
 
         # NOTE: built via a Catalyst plan, not createDataFrame — an
@@ -419,10 +457,52 @@ class TestCCHybridPaths:
         monkeypatch.undo()
         assert via_stats == via_count and len(via_stats) > 0
         # stats fire but rows exceed the gate: distributed fall-through
-        via_fallthrough = {
-            tuple(r)
-            for r in C.connected_components(
-                df, assume_materialized=True, driver_max_edges=5
-            ).collect()
-        }
-        assert via_fallthrough == via_stats
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 5)
+        sizes = self._record_collects(monkeypatch, df)
+        out = C.connected_components(df, assume_materialized=True)
+        # the fixpoint's convergence signatures are 1-row collects;
+        # any longer collect carried edge rows to the driver
+        edge_collects = [n for n in sizes if n > 1]
+        assert len(edge_collects) <= 1 and sum(edge_collects) <= 6
+        assert {tuple(r) for r in out.collect()} == via_stats
+
+    def test_stats_small_misestimate_collect_is_bounded(
+        self, spark, monkeypatch
+    ):
+        """A checkpointed explode misestimates tiny (Catalyst reports a
+        few bytes for thousands of rows), so the size statistic admits
+        it.  The stats path must still bring at most gate + 1 rows to
+        the driver and return the count-gated path's labels."""
+        import graphgen_spark.operators.components as C
+
+        # four stars: hub i*1000 -> i*1000 + 1..500 (2000 rows)
+        df = (
+            spark.range(4)
+            .select(
+                (F.col("id") * 1000).alias("src"),
+                F.explode(
+                    F.sequence(
+                        F.col("id") * 1000 + 1, F.col("id") * 1000 + 500
+                    )
+                ).alias("dst"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        assert C._stats_prove_small(df)
+        gate = 1000
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", gate)
+        sizes = self._record_collects(monkeypatch, df)
+        via_stats = C.connected_components_long(
+            df, assume_materialized=True
+        )
+        assert sizes and max(sizes) <= gate + 1
+        monkeypatch.setattr(
+            C, "_stats_prove_small", lambda d, bound=0: False
+        )
+        via_count = C.connected_components_long(
+            df, assume_materialized=True
+        )
+        got = {tuple(r) for r in via_stats.collect()}
+        assert got == {tuple(r) for r in via_count.collect()}
+        assert {c for _, c in got} == {0, 1000, 2000, 3000}
+        assert len(got) == 2004

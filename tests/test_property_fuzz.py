@@ -72,6 +72,9 @@ def _brute_components(pairs):
 def test_union_find_matches_bfs_closure(g):
     n, edges = g
     assert sorted(_driver_union_find(edges)) == _brute_components(edges)
+    # the driver gate feeds names too: min-name representative
+    named = [(f"n{a}", f"n{b}") for a, b in edges]
+    assert sorted(_driver_union_find(named)) == _brute_components(named)
 
 
 # -- _membership_to_rows conservation laws ---------------------------
