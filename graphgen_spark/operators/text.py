@@ -56,13 +56,19 @@ def html_to_text(raw_html: str) -> str:
     return "\n\n".join(p for p in paras if p)
 
 
+def page_text(html) -> str:
+    """One page's html (bytes, str or null) -> its text.  Bytes decode
+    as UTF-8 with replacement; a null page has no text, like ``b""``."""
+    if html is None:
+        return ""
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", errors="replace")
+    return html_to_text(str(html))
+
+
 @pandas_udf(T.StringType())
 def extract_text_udf(html_bytes: pd.Series) -> pd.Series:
-    return html_bytes.map(
-        lambda b: html_to_text(
-            b.decode("utf-8", errors="replace") if isinstance(b, (bytes, bytearray)) else str(b)
-        )
-    )
+    return html_bytes.map(page_text)
 
 
 @pandas_udf(T.StringType())

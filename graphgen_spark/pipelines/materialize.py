@@ -2,50 +2,63 @@
 
 Stage tables under ``ckpt_root``:
 
-    docs/      (url-keyed)           — extracted text
+    docs/      (url-keyed)           — extracted text, one row per page
     chunks/    (chunk_id, url)       — chunked docs
-    records/   (content-addressed)   — parsed extraction records
-    done_docs/, done_chunk_docs/,    — processed-input manifests
-    done_record_chunks/
+    records/   (content-addressed)   — raw (unlinked) extraction records
+    done_chunk_docs/ (url)           — the one processed-page manifest
     nodes/ edges/ triples/ coverage/ — final tables (recomputed from
                                        the full records table through
                                        ``records_to_graph``, the one
                                        records -> graph tail every entry
-                                       point shares; canonicalize drops
-                                       self-loops on every path.  Merge
+                                       point shares, so the graph is
+                                       re-linked on every commit.  Merge
                                        aggregates are cheap relative to
                                        extraction, and union-new+old →
                                        groupBy is the reference's own
                                        merge semantics)
-    lineage/   (src_id, dst_id, op)  — doc→chunk, chunk→triple
-    _metrics/  per-stage per-partition row counts
+    lineage/op=doc_to_chunk/,        — (src_id, dst_id) per op
+    lineage/op=chunk_to_triple/
+    _metrics/<stage>/                — observed row counts per commit
 
-Kill-safety: outputs are appended BEFORE done-manifests, and every
-append anti-joins on content-hash keys, so a crash between the two
-writes only causes idempotent reprocessing, never duplicates or loss.
+One hop.  The pages not yet in ``done_chunk_docs`` go through ONE
+fused Python pass (``fused.pages_to_stages``) that emits, per page, its
+docs row, then per chunk its chunks row and raw records rows, tagged by
+stage.  That output is persisted; the three stage appends are
+projections of it, so the Python hop runs once per commit.
 
-The commit is a small write DAG.  Only the chain docs -> chunks ->
-records -> graph blocks the caller: each stage appends, is read back,
-and feeds the next stage.  Every write that nothing later in the
-commit reads goes to ``OffPathWrites`` and runs beside that chain:
+Only hop -> records append -> graph blocks the caller.  The records
+append runs on the caller thread and its read-back feeds
+``records_to_graph``.  Everything else goes to ``OffPathWrites`` and
+runs beside that chain:
 
-    done_docs, done_record_chunks — each submitted right after its
-        stage's append returns (outputs still land before their
-        manifest)
-    _metrics/<stage>              — from checkpoint_stage
-    nodes, edges, triples, coverage — one write each
-    lineage doc->chunk, lineage chunk->triple, done_chunk_docs — one
-        task, in this order: both lineage writes live under lineage/,
-        and writing done_chunk_docs re-caches the persisted new chunks
-        (their plan reads that manifest), so it must follow the
-        doc->chunk lineage that reads them
+    alias_labels     — started as soon as the appends are prepared, so
+                       it runs beside the hop; the graph tail waits
+                       for it
+    docs append, chunks append, doc->chunk lineage, done_chunk_docs —
+                       one task, in this order, submitted once the
+                       records append has returned
+    nodes, edges, triples, coverage, chunk->triple lineage — one task
+                       each (the two lineage ops own separate partition
+                       directories)
 
-No two concurrent writes share a table directory.  The new chunks are
-persisted, since both the chunks append and the doc->chunk lineage read
-them; no other intermediate is read twice.  Every table is read with
-its known schema (no schema-inference job).  ``run_checkpointed``
-returns only after every write has finished, and re-raises the first
-failure.
+Why the manifest goes last: a url in ``done_chunk_docs`` must imply
+that its docs, chunks and records rows all landed, so it is written
+after all three appends (a crash before it only causes idempotent
+reprocessing: every append anti-joins on its content-hash keys).  It
+must also follow every reader of the persisted hop output: the hop
+reads ``done_chunk_docs`` through its anti-join, and writing that
+manifest re-caches every cached plan over it, after which the hop
+would recompute as empty.  Roots written before the single manifest
+also hold ``done_docs`` / ``done_record_chunks``; they are ignored,
+since their ``done_chunk_docs`` was likewise written last.
+
+Stage counts cost no job: each append carries ``observe`` metrics
+(rows appended; rows offered and skipped where the anti-join ran),
+written under ``_metrics/<stage>`` by a local parquet write once every
+write has finished.  No two concurrent writes share a directory; every
+table is read with its known schema (no schema-inference job).
+``run_checkpointed`` returns only after every write has finished, and
+re-raises the first failure.
 """
 
 from __future__ import annotations
@@ -59,19 +72,28 @@ from pyspark.sql import functions as F
 from graphgen_spark.operators.checkpointing import (
     OffPathWrites,
     Write,
-    append_lineage,
     checkpoint_stage,
     lineage_edges,
-    overwrite_lineage,
+    lineage_write,
+    write_metrics,
 )
-from graphgen_spark.operators.chunking import chunk_documents
-from graphgen_spark.operators.kg_extract import extract_records
+from graphgen_spark.operators.fused import (
+    STAGE_COLUMNS,
+    pages_to_stages,
+    stage_rows,
+)
 from graphgen_spark.operators.stats import coverage_by_url
-from graphgen_spark.operators.text import with_extracted_text
 from graphgen_spark.pipelines.kg_pipeline import (
     alias_labels,
     records_to_graph,
 )
+
+# stage -> the keys its append anti-joins on
+STAGE_KEYS = {
+    "docs": ["url"],
+    "chunks": ["chunk_id", "url"],
+    "records": STAGE_COLUMNS["records"],
+}
 
 
 def _todo(
@@ -105,50 +127,59 @@ def run_checkpointed(
     def path(name: str) -> str:
         return os.path.join(ckpt_root, name)
 
-    new_chunks = None
+    manifest = path("done_chunk_docs")
+
+    hop = None
     try:
         with OffPathWrites(spark) as writes:
-            # -- stage 1: docs (extract text); key = url ---------------
-            new_pages = _todo(spark, pages, path("done_docs"), ["url"])
-            new_docs = with_extracted_text(new_pages, out_col="text").select(
-                "url", "text", "warc_ts"
-            )
-            docs = checkpoint_stage(
-                spark, new_docs, ckpt_root, "docs", ["url"]
-            )
-            writes.submit(_manifest(new_docs, ["url"], path("done_docs")))
-
-            # -- stage 2: chunks; manifest = done_chunk_docs urls ------
-            chunk_keys = ["chunk_id", "url"]
-            docs_todo = _todo(spark, docs, path("done_chunk_docs"), ["url"])
-            # read twice (the append and the doc->chunk lineage): the
-            # chunking hop runs once
-            new_chunks = chunk_documents(
-                docs_todo, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+            # -- one hop over the new pages; read by every append and
+            # the doc->chunk lineage, so it is persisted
+            new_pages = _todo(spark, pages, manifest, ["url"])
+            hop = pages_to_stages(
+                new_pages, chunk_size=chunk_size, chunk_overlap=chunk_overlap
             ).persist(StorageLevel.MEMORY_AND_DISK)
-            chunks = checkpoint_stage(
-                spark, new_chunks, ckpt_root, "chunks", chunk_keys
-            )
+            stages = {
+                stage: checkpoint_stage(
+                    spark, stage_rows(hop, stage), ckpt_root, stage, keys
+                )
+                for stage, keys in STAGE_KEYS.items()
+            }
 
-            # -- stage 3: records; manifest = processed (chunk_id, url)
-            chunks_todo = _todo(
-                spark, chunks, path("done_record_chunks"), chunk_keys
-            )
-            records = checkpoint_stage(
-                spark, extract_records(chunks_todo), ckpt_root, "records",
-                ["chunk_id", "url", "kind", "f1", "f2", "f3"],
-            )
-            writes.submit(
-                _manifest(chunks_todo, chunk_keys, path("done_record_chunks"))
-            )
-
-            # -- final tables: recomputed from the full records table --
+            # -- labels, beside the hop.  Started once the appends are
+            # prepared: until the graph tail waits for them, the caller
+            # calls no layer function (perfbench's spans nest on one
+            # stack and would interleave with the labels' own)
             labels = (
-                alias_labels(alias_dict).localCheckpoint(eager=True)
+                writes.run(
+                    lambda: alias_labels(alias_dict).localCheckpoint(
+                        eager=True
+                    )
+                )
                 if alias_dict is not None
                 else None
             )
-            g = records_to_graph(records, labels)
+
+            # -- records: appended on the caller, read back for the graph
+            writer, records_path = stages["records"].write
+            writer.parquet(records_path)
+            records = stages["records"].read(spark)
+
+            # -- docs, chunks, doc->chunk lineage, then the manifest
+            writes.submit(
+                stages["docs"].write,
+                stages["chunks"].write,
+                lineage_write(
+                    lineage_edges(stage_rows(hop, "chunks"), "doc_id",
+                                  "chunk_id", "doc_to_chunk"),
+                    ckpt_root, "doc_to_chunk", "append",
+                ),
+                _manifest(stage_rows(hop, "docs"), ["url"], manifest),
+            )
+
+            # -- final tables: recomputed from the full records table --
+            g = records_to_graph(
+                records, labels.result() if labels is not None else None
+            )
             finals = {
                 "nodes": g["nodes"],
                 "edges": g["edges"],
@@ -157,36 +188,21 @@ def run_checkpointed(
             }
             for name, df in finals.items():
                 writes.submit((df.write.mode("overwrite"), path(name)))
-
-            # -- lineage, then the chunk manifest: one task -----------
-            # Both lineage writes go under lineage/.  chunk->triple is
-            # derived from the FULL triples every run, so it is
-            # overwritten (append would duplicate rows on each resume).
-            # The chunk manifest comes after the doc->chunk lineage:
-            # writing it refreshes every cached plan that reads it, and
-            # new_chunks does (through the anti-join), so a lineage
-            # read after it would see no new chunks.
             triple_ids = g["triples"].withColumn(
                 "triple_id",
                 F.md5(F.concat_ws("\x1f", "subj", "pred", "obj")),
             )
             writes.submit(
-                append_lineage(
-                    lineage_edges(new_chunks, "doc_id", "chunk_id",
-                                  "doc_to_chunk"),
-                    ckpt_root,
-                ),
-                overwrite_lineage(
+                lineage_write(
                     lineage_edges(triple_ids, "chunk_id", "triple_id",
                                   "chunk_to_triple"),
-                    ckpt_root,
-                    "chunk_to_triple",
-                ),
-                _manifest(docs_todo, ["url"], path("done_chunk_docs")),
+                    ckpt_root, "chunk_to_triple", "overwrite",
+                )
             )
     finally:
-        if new_chunks is not None:
-            new_chunks.unpersist()
+        if hop is not None:
+            hop.unpersist()
+    write_metrics(ckpt_root, list(stages.values()))
 
     # read only now: a file listing taken before a write finished
     # would miss its files
@@ -194,5 +210,5 @@ def run_checkpointed(
         name: spark.read.schema(df.schema).parquet(path(name))
         for name, df in finals.items()
     }
-    out.update({"docs": docs, "chunks": chunks, "records": records})
+    out.update({stage: a.read(spark) for stage, a in stages.items()})
     return out

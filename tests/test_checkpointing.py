@@ -3,6 +3,7 @@ kill (simulated by running on a prefix of the corpus first) must top up
 to EXACTLY the same final tables, with zero duplicate trace ids."""
 
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +16,17 @@ from graphgen_spark.pipelines.materialize import run_checkpointed
 
 N_PAGES = 40
 N_ENT = synth.n_entities_for(N_PAGES)
+STAGES = ("docs", "chunks", "records")
+
+
+def _metric_rows(spark, root):
+    return [r.asDict() for r in read_metrics(spark, root).select(
+        "stage", "n_rows", "n_offered", "n_skipped", "commit_id"
+    ).collect()]
+
+
+def _row_counter(df, cols):
+    return Counter(tuple(r) for r in df.select(*cols).collect())
 
 
 def _triple_set(out):
@@ -81,10 +93,67 @@ class TestResume:
         # Iceberg snapshots would version this on a real cluster)
         n1 = first["records"].count()
         t1 = _triple_set(first)
+        landed = {s: first[s].count() for s in STAGES}
+
+        # the observed counts of the first commit are the rows that
+        # landed; no anti-join ran, so nothing was offered or skipped
+        m1 = _metric_rows(spark, ckpt_dir)
+        assert {r["stage"]: r["n_rows"] for r in m1} == landed
+        assert all(r["n_offered"] is None for r in m1)
+        assert len({r["commit_id"] for r in m1}) == 1
+
         again = run_checkpointed(spark, pages, ckpt_dir, alias_dict=alias,
                                  chunk_size=256, chunk_overlap=32)
         assert again["records"].count() == n1
         assert _triple_set(again) == t1
+
+        # the no-op re-run appended nothing to any stage
+        m2 = [r for r in _metric_rows(spark, ckpt_dir) if r not in m1]
+        assert {r["stage"]: (r["n_rows"], r["n_skipped"]) for r in m2} == {
+            s: (0, 0) for s in STAGES
+        }
+
+    def test_crash_before_manifest_resumes_to_oneshot(
+        self, spark, ckpt_dir, tmp_path, monkeypatch
+    ):
+        """Kill-safety of the one manifest: a commit that dies after its
+        three appends but before done_chunk_docs is written is topped up
+        by the next commit, with no key duplicated."""
+        alias = synth.alias_dictionary_df(spark, N_ENT)
+        pages = synth.pages_df(spark, N_PAGES, N_ENT)
+        kw = {"alias_dict": alias, "chunk_size": 256, "chunk_overlap": 32}
+        run_checkpointed(spark, pages.limit(N_PAGES // 2), ckpt_dir, **kw)
+
+        class Killed:
+            def parquet(self, path):
+                raise RuntimeError("killed before the manifest")
+
+        monkeypatch.setattr(
+            materialize, "_manifest",
+            lambda df, keys, manifest: (Killed(), manifest),
+        )
+        with pytest.raises(RuntimeError, match="killed before the manifest"):
+            run_checkpointed(spark, pages, ckpt_dir, **kw)
+        monkeypatch.undo()
+        # the appends landed, the manifest did not
+        docs_urls = spark.read.parquet(f"{ckpt_dir}/docs").select("url")
+        assert docs_urls.distinct().count() == N_PAGES
+        manifest = spark.read.parquet(f"{ckpt_dir}/done_chunk_docs")
+        assert manifest.count() == N_PAGES // 2
+
+        resumed = run_checkpointed(spark, pages, ckpt_dir, **kw)
+        oneshot = run_checkpointed(
+            spark, pages, str(tmp_path / "oneshot"), **kw
+        )
+        assert _triple_set(resumed) == _triple_set(oneshot)
+        for stage in STAGES:
+            cols = resumed[stage].columns
+            assert _row_counter(resumed[stage], cols) == _row_counter(
+                oneshot[stage], cols
+            ), stage
+        for stage, keys in materialize.STAGE_KEYS.items():
+            df = resumed[stage]
+            assert df.count() == df.select(*keys).distinct().count(), stage
 
     def test_lineage_and_metrics_written(self, spark, ckpt_dir):
         alias = synth.alias_dictionary_df(spark, N_ENT)

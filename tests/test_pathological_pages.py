@@ -104,7 +104,9 @@ def _rows(df, cols):
 class TestEntryPointsAgree:
     """Every KG entry point shares one records -> graph tail, so the
     same pages give the same triples everywhere — self-loop page
-    included, with and without an alias dictionary."""
+    included, with and without an alias dictionary — and the
+    checkpointed commit lands the same docs / chunks / records rows as
+    the in-memory pipelines."""
 
     @pytest.mark.parametrize("with_dict", [False, True],
                              ids=["no_dict", "dict"])
@@ -147,6 +149,28 @@ class TestEntryPointsAgree:
             assert committed, name
             assert _rows(composed[name], cols) == committed, name
             assert _rows(fused[name], cols) == committed, name
+
+        # the stage tables the commit lands from its one fused hop equal
+        # the composed stages; fused records equal them without a
+        # dictionary (with one they are linked map-side, and the graph
+        # equality above covers them)
+        stage_cols = {
+            "docs": ["url", "text", "warc_ts"],
+            "chunks": ["chunk_id", "url", "doc_id", "content", "language",
+                       "n_tokens", "chunk_index"],
+            "records": ["chunk_id", "url", "kind", "f1", "f2", "f3"],
+        }
+        for stage, cols in stage_cols.items():
+            committed = _rows(ckpt[stage], cols)
+            assert committed, stage
+            assert _rows(composed[stage], cols) == committed, stage
+            if stage != "records" or not with_dict:
+                assert _rows(fused[stage], cols) == committed, stage
+        # a null page has empty text, like an empty one, and no chunk
+        null_docs = ckpt["docs"].where(F.col("url") == "http://x/null")
+        assert [r["text"] for r in null_docs.collect()] == [""]
+        null_chunks = ckpt["chunks"].where(F.col("url") == "http://x/null")
+        assert null_chunks.count() == 0
 
         labels = alias_labels(alias) if with_dict else None
         state_edges = finalize_kg_state(
