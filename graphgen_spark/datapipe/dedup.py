@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from graphgen_spark.operators.components import connected_components_long
+from graphgen_spark.session import widen_narrow
 
 # Persisted intermediates (shingle postings, signature tables, LSH
 # buckets) are registered here so long-lived sessions can release the
@@ -36,8 +37,10 @@ from graphgen_spark.operators.components import connected_components_long
 _CACHE_HANDLES: list[DataFrame] = []
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    h = df.persist(StorageLevel.MEMORY_AND_DISK)
+def _persist(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+) -> DataFrame:
+    h = df.persist(level)
     _CACHE_HANDLES.append(h)
     return h
 
@@ -74,39 +77,36 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
 # ------------------------------------------------------ n-gram Jaccard
 
 
-def _gram_array(text_col: str, n: int):
-    """Column expr: the DISTINCT non-empty word n-gram shingles of a
-    text column as an array — the single definition behind both the
-    exploded postings table (``shingles``) and the per-doc set arrays
-    the minhash verifier intersects."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.filter(
-        F.array_distinct(grams), lambda s: F.length(s) > 0
-    )
+def _doc_grams(text, n: int) -> list[str]:
+    """One doc's DISTINCT non-empty word n-grams, first-occurrence
+    order: ``str.split()`` tokens, a gram per start position, a doc
+    shorter than ``n`` tokens as one gram of all its tokens, a
+    token-less doc as no gram.  The one gram builder behind the MinHash
+    hop (``_sig_sets``) and the shingle kernel (``_gram_sets_df``).
+
+    ``str.split()`` agrees with the SQL ``split(trim(text), '\\s+')``
+    on ASCII-whitespace corpora, the documented assumption behind every
+    minhash/ngram oracle."""
+    toks = str(text or "").split()
+    if not toks:
+        return []
+    return list(dict.fromkeys(
+        " ".join(toks[i: i + n]) for i in range(max(len(toks) - n, 0) + 1)
+    ))
 
 
 def _gram_sets_df(
     docs: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """(doc_id, hs array<string>): each doc's DISTINCT non-empty word
-    n-gram shingles, first-occurrence order — the vectorized Python
-    twin of ``_gram_array``.
+    """(doc_id, hs array<string>): each doc's ``_doc_grams`` set.
 
     r7: the SQL formulation (split + sequence + per-index slice +
     concat_ws + array_distinct) costs ~50 ms/doc of interpreted
     higher-order-function evaluation on 600-token docs — it was the
     dominant cold cost of BOTH shingle consumers (ngram postings 29 s,
     minhash verification doc-set build 46 s at 50k docs).  The same
-    gram construction in plain Python is ~100x faster; it reuses the
-    EXACT tokenizer of ``minhash_signatures``'s gram builder
-    (``str.split()``), whose parity with the SQL ``split(trim(text),
-    '\\s+')`` on ASCII-whitespace corpora is the already-documented
-    assumption behind every minhash/ngram oracle.  A differential
-    test pins kernel == _gram_array per doc."""
+    gram construction in plain Python is ~100x faster.  A differential
+    test pins this kernel to the SQL formulation per doc."""
     out_schema = T.StructType([
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("hs", T.ArrayType(T.StringType()), False),
@@ -114,17 +114,10 @@ def _gram_sets_df(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, sets = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = str(text or "").split()
-                grams = dict.fromkeys(
-                    " ".join(toks[i: i + n])
-                    for i in range(max(len(toks) - n, 0) + 1)
-                )
-                grams.pop("", None)
-                ids.append(int(did))
-                sets.append(list(grams))
-            yield pd.DataFrame({"doc_id": ids, "hs": sets})
+            yield pd.DataFrame({
+                "doc_id": [int(d) for d in pdf[id_col]],
+                "hs": [_doc_grams(t, n) for t in pdf[text_col]],
+            })
 
     return docs.select(id_col, text_col).mapInPandas(
         gen, schema=out_schema
@@ -217,18 +210,29 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 3, num_perm: int = 64, seed: int = 42,
+def _sig_sets(
+    docs: DataFrame, text_col: str, id_col: str, n: int, num_perm: int,
+    seed: int,
 ) -> DataFrame:
-    """(doc_id, sig array<long>): vectorized numpy MinHash over word
-    n-gram shingles (Arrow-batched; one pass per batch)."""
+    """(doc_id, sig array<long>, hs array<string>): the one Python hop
+    of the MinHash path.  Per doc it builds the ``_doc_grams`` set once
+    and emits both its MinHash signature (banded into candidates) and
+    the set itself (scored by ``minhash_verified_pairs``), so no doc is
+    tokenized twice.  A token-less doc has ``hs = []`` but signs the
+    one empty gram, as the oracle's ``greatest(len(toks) - n + 1, 1)``
+    range does.
+
+    A narrow input (a small parquet corpus arrives as ONE split) would
+    run the whole hop in one task: ``widen_narrow`` spreads it over the
+    session's cores by doc-id hash, the rule ``run_kg_pipeline``
+    applies to pages."""
     a_coef, b_coef = _minhash_params(num_perm, seed)
 
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
             T.StructField("sig", T.ArrayType(T.LongType()), False),
+            T.StructField("hs", T.ArrayType(T.StringType()), False),
         ]
     )
 
@@ -237,23 +241,14 @@ def minhash_signatures(
 
         md5 = hashlib.md5
         for pdf in batches:
-            gram_lists = []
-            for text in pdf[text_col]:
-                toks = str(text or "").split()
-                gram_lists.append(
-                    list(
-                        {
-                            " ".join(toks[i : i + n])
-                            for i in range(max(len(toks) - n + 1, 1))
-                        }
-                    )
-                )
+            sets = [_doc_grams(text, n) for text in pdf[text_col]]
+            signed = [hs or [""] for hs in sets]
             # 32-bit md5 prefix: engine-portable (DuckDB:
             # ('0x'||substr(md5(g),1,8))::BIGINT), unlike crc32.
             # Dedup-corpus batches share most grams across docs, so
             # hash each DISTINCT gram once per batch (factorize), not
             # per occurrence — same trick as the SimHash kernel.
-            flat = [g for gl in gram_lists for g in gl]
+            flat = [g for gl in signed for g in gl]
             rows = []
             if flat:
                 inv, uniq = pd.factorize(np.array(flat, dtype=object))
@@ -267,7 +262,7 @@ def minhash_signatures(
                 )
                 hv_all = uniq_h[inv]
                 off = 0
-                for did, gl in zip(pdf[id_col], gram_lists):
+                for did, gl, hs in zip(pdf[id_col], signed, sets):
                     hv = hv_all[off : off + len(gl)]
                     off += len(gl)
                     # sig_j = min_i (a_j*h_i + b_j) mod p — exact int64
@@ -275,10 +270,22 @@ def minhash_signatures(
                         (hv[:, None] * a_coef[None, :]
                          + b_coef[None, :]) % _MERSENNE
                     ).min(axis=0)
-                    rows.append((int(did), sig.tolist()))
-            yield pd.DataFrame(rows, columns=["doc_id", "sig"])
+                    rows.append((int(did), sig.tolist(), hs))
+            yield pd.DataFrame(rows, columns=["doc_id", "sig", "hs"])
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
+    src = widen_narrow(docs.select(id_col, text_col), F.xxhash64(id_col))
+    return src.mapInPandas(gen, schema=out_schema)
+
+
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+    n: int = 3, num_perm: int = 64, seed: int = 42,
+) -> DataFrame:
+    """(doc_id, sig array<long>): vectorized numpy MinHash over word
+    n-gram shingles (Arrow-batched; one pass per batch)."""
+    return _sig_sets(docs, text_col, id_col, n, num_perm, seed).select(
+        "doc_id", "sig"
+    )
 
 
 # The config runner's default hot-bucket cap (``bucket_cap: auto``).
@@ -293,24 +300,14 @@ def minhash_signatures(
 AUTO_BUCKET_CAP = 100
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 3, num_perm: int = 64, bands: int = 16, seed: int = 42,
-    bucket_cap: int | None = None,
+def _lsh_candidates(
+    sigs: DataFrame, num_perm: int, bands: int, bucket_cap: int | None,
 ) -> DataFrame:
-    """The candidate-generation half of ``minhash_verified_pairs``:
-    signatures -> band buckets -> (optional hot-bucket cap) -> distinct
-    candidate (a, b) pairs.  Factored out so the candidate VOLUME —
-    the quantity every cap/banding policy actually controls, and the
-    term the verification join multiplies by each doc's shingle list —
-    is measurable on its own (tools/dfcap_run.py ``candonly`` mode)
-    and the capped/uncapped plan shape stays one code path."""
+    """Band buckets over a (doc_id, sig) frame -> (optional hot-bucket
+    cap) -> distinct candidate (a, b) pairs.  The caller persists
+    ``sigs``: the cap's hot-bucket aggregate and its anti-join each read
+    it, and a re-read would re-run the Python hop."""
     rows_per_band = num_perm // bands
-    # both sides of the bucket self-join scan the signatures — persist
-    # so the Python MinHash hop runs once, not twice
-    sigs = _persist(minhash_signatures(
-        docs, text_col, id_col, n, num_perm, seed
-    ))
     banded = sigs.select(
         "doc_id",
         F.explode(
@@ -365,6 +362,25 @@ def lsh_candidate_pairs(
     )
 
 
+def lsh_candidate_pairs(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+    n: int = 3, num_perm: int = 64, bands: int = 16, seed: int = 42,
+    bucket_cap: int | None = None,
+) -> DataFrame:
+    """The candidate-generation half of ``minhash_verified_pairs``:
+    signatures -> band buckets -> (optional hot-bucket cap) -> distinct
+    candidate (a, b) pairs.  Exposed so the candidate VOLUME — the
+    quantity every cap/banding policy actually controls, and the term
+    the verification join multiplies by each doc's shingle list — is
+    measurable on its own (tools/dfcap_run.py ``candonly`` mode);
+    ``minhash_verified_pairs`` bands through the same ``_lsh_candidates``
+    so the capped/uncapped plan shape stays one code path."""
+    sigs = _persist(minhash_signatures(
+        docs, text_col, id_col, n, num_perm, seed
+    ))
+    return _lsh_candidates(sigs, num_perm, bands, bucket_cap)
+
+
 def minhash_verified_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n: int = 3, num_perm: int = 64, bands: int = 16,
@@ -379,9 +395,9 @@ def minhash_verified_pairs(
     that follows in minhash_lsh_dedup is the only non-SQL part).
 
     Scale shape: the only joins are (bucket self-join) and (pair
-    verification vs the shingle postings); both are hash joins on
-    bounded keys — candidate generation is linear in corpus size
-    PROVIDED no band bucket degenerates.
+    verification vs each doc's gram-set array, one row per doc); both
+    are hash joins on bounded keys — candidate generation is linear in
+    corpus size PROVIDED no band bucket degenerates.
 
     ``bucket_cap``: drop (band, bucket) groups holding more than this
     many docs before the self-join — the LSH twin of the ngram
@@ -394,52 +410,59 @@ def minhash_verified_pairs(
     uncapped wall to ~19 min (BENCH_SCALING.jsonl dfcap lines).  What
     a cap drops is either an exact-duplicate cluster (exact_dedup's
     job, one hash shuffle) or degenerate — the same recall argument as
-    df_cap."""
-    candidates = _persist(lsh_candidate_pairs(
-        docs, text_col, id_col, n, num_perm, bands, seed, bucket_cap
-    ))
+    df_cap.
 
-    # verify candidates with exact n-gram Jaccard.  r6 shape: capped
-    # candidate volume is tiny and near-linear in corpus size
-    # (measured 48.8k pairs at 160k pages -> 147k at 640k,
-    # bands=4/cap=25 — BENCH_SCALING.jsonl lsh_candidate_pairs lines)
-    # while the shingle POSTINGS table is strictly linear and huge
-    # (~128M rows at 640k pages), so the old candidates×postings
-    # verification join shuffled the whole postings table to score a
-    # droplet of pairs and dominated the wall.  Instead: semi-join-
-    # prune docs to
-    # candidate members (AQE broadcasts the tiny member list), build
-    # each member's distinct-shingle ARRAY inline (no explode, no
-    # groupBy), and score pairs with array_intersect — every shuffle
-    # left is proportional to the candidate volume, not the corpus.
-    cand_docs = (
-        candidates.select(F.col("a").alias(id_col))
-        .unionAll(candidates.select(F.col("b").alias(id_col)))
-        .distinct()
+    Cache: the hop output (every doc's signature AND gram set, on
+    local disk) and the banded table stay persisted until
+    ``release_dedup_caches``.  The gram sets are ~3.5x the corpus
+    parquet (160k synthetic pages: 389 MB of hop output for a 111 MB
+    corpus; 640k: 1.57 GB)."""
+    # one Python hop per doc: its signatures feed the bands, its gram
+    # sets the scoring joins below — both read the persisted output.
+    # DISK_ONLY: a cached partition holds a whole input split's gram
+    # sets, and re-reading spilled MEMORY_AND_DISK blocks of that size
+    # ran a 4 GB driver out of heap at 640k pages (4 cores), where the
+    # member-pruned design this replaced passed (191 s); on disk the
+    # same run passed in 150 s with 40 MB of memory cache, and a warm
+    # 2k-doc call costs the same as in memory.
+    hop = _persist(
+        _sig_sets(docs, text_col, id_col, n, num_perm, seed),
+        StorageLevel.DISK_ONLY,
     )
-    doc_sets = _persist(
-        _gram_sets_df(
-            docs.join(cand_docs, id_col, "left_semi"),
-            text_col, id_col, n,
+    candidates = _lsh_candidates(
+        hop.select("doc_id", "sig"), num_perm, bands, bucket_cap
+    )
+
+    # verify candidates with exact n-gram Jaccard: each side joins its
+    # doc's gram-set array from the persisted hop, scored with
+    # array_intersect.  AQE broadcasts the small candidate table into
+    # the first join, so only the second shuffles the hop's gram sets.
+    # No semi-join prunes the doc side to candidate members first:
+    # unpersisted, the member list re-runs the candidate DAG (2k docs:
+    # 36 jobs instead of 14, ~0.7 s more per call); with `candidates`
+    # persisted, the pruned scoring still took 76-90 s at 160k pages
+    # against 46 s unpruned (hop cached in memory in both runs).  Sizes
+    # are longs: the cross-multiplications below overflow int past
+    # 2 147 shared grams.
+    def side(s: str) -> DataFrame:
+        return hop.select(
+            F.col("doc_id").alias(s), F.col("hs").alias(f"hs_{s}"),
+            F.size("hs").cast("long").alias(f"sz_{s}"),
         )
-        .withColumn("sz", F.size("hs"))
-        # parity with the postings formulation: a zero-shingle doc had
-        # no postings row, so its pairs never reached the output
-        .where(F.col("sz") > 0)
-    )
+
     thr_micro = int(round(threshold * 1_000_000))
     return (
-        candidates
-        .join(doc_sets.select(F.col("doc_id").alias("a"),
-                              F.col("hs").alias("hs_a"),
-                              F.col("sz").alias("sz_a")), "a")
-        .join(doc_sets.select(F.col("doc_id").alias("b"),
-                              F.col("hs").alias("hs_b"),
-                              F.col("sz").alias("sz_b")), "b")
-        .withColumn(
-            "common", F.size(F.array_intersect("hs_a", "hs_b"))
+        candidates.join(side("a"), "a").join(side("b"), "b")
+        # exact Jaccard length bound: |A∩B| <= min and |A∪B| >= max,
+        # so J <= min/max — drops only pairs the threshold would
+        .where(
+            F.least("sz_a", "sz_b") * 1_000_000
+            >= thr_micro * F.greatest("sz_a", "sz_b")
         )
-        # postings parity: pairs with no common shingle never grouped
+        .withColumn(
+            "common", F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
+        )
+        # the oracle scores only pairs sharing a shingle (its com join)
         .where(F.col("common") > 0)
         .withColumn(
             "uni", F.col("sz_a") + F.col("sz_b") - F.col("common")
@@ -611,7 +634,7 @@ def minhash_lsh_dedup(
     Returns (doc_id, group_id, keep)."""
     # persisted (r7): the CC gate's count and collect (or the
     # fixpoint's reads, past the gate) each read one cached droplet
-    # instead of re-running the candidates x doc_sets scoring join per
+    # instead of re-running the candidates x gram-set scoring joins per
     # action, and repeated dedup calls in one session reuse it via the
     # plan cache, exactly like the signature/bucket intermediates above
     verified = _persist(minhash_verified_pairs(
@@ -1084,6 +1107,9 @@ def embedding_neardup_pairs(
         "id",
         F.posexplode(F.col("bs")).alias("tbl", "bucket"),
     ).select("id", "tbl", "bucket")
+    # the kernel's input is NOT widened like the MinHash hop's: the
+    # vector shuffle costs more than it saves (2k 64-d vectors, 4
+    # cores: a warm call's median went from 0.98 s to 1.39 s widened)
     bucketed = _persist(bucketed)  # both sides of the bucket self-join
     left = bucketed.select(F.col("id").alias("a"), "tbl", "bucket")
     right = bucketed.select(F.col("id").alias("b"), "tbl", "bucket")

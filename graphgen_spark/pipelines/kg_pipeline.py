@@ -37,6 +37,7 @@ from graphgen_spark.operators.kg_extract import (
 )
 from graphgen_spark.operators.merge import merge_edges, merge_nodes
 from graphgen_spark.operators.text import with_extracted_text
+from graphgen_spark.session import widen_narrow
 
 # Map-side linking collects the label table to the driver for a Python
 # broadcast — a driver OOM with a multi-GB alias dictionary.  Past this
@@ -340,18 +341,13 @@ def run_kg_pipeline(
     checkpointed production pipeline gets the same effect by landing
     records as a stage table.
     """
-    # repartition by url hash: extraction cost is ~uniform per doc and
-    # this keeps hot-host pages from skewing a single input split.  A
-    # small parquet input arrives as ONE split (a 5k-page suite dir is
-    # a single row group), which would run the whole Python extraction
-    # in one task — widen to the session's parallelism.  Inputs already
-    # wider than the core count (any real crawl dump) are left alone:
-    # no shuffle of raw html at scale.
+    # spread a narrow input by url hash (a 5k-page suite dir is a single
+    # row group, so one split): extraction cost is ~uniform per doc and
+    # this keeps hot-host pages from skewing one task.
     par = spark.sparkContext.defaultParallelism
-    widen = pages.rdd.getNumPartitions() < par
     pages_in = pages  # pre-repartition input, for the docs plan below
-    if widen:
-        pages = pages.repartition(par, F.crc32("url"))
+    pages = widen_narrow(pages_in, F.crc32("url"))
+    widen = pages is not pages_in
 
     def _build_docs() -> DataFrame:
         d = with_extracted_text(

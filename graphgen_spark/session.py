@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -57,3 +57,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def widen_narrow(df: DataFrame, key: Column) -> DataFrame:
+    """``df`` hash-repartitioned by ``key`` to the session's parallelism
+    when it has fewer partitions than that, else ``df`` itself.
+
+    A small parquet input arrives as ONE split, which would run a
+    per-row Python hop in one task.  An input already that wide (any
+    real crawl dump) is left alone, so raw text is never shuffled at
+    scale.  So is one whose plan holds an exchange: under AQE, counting
+    its partitions would run that exchange as a job of its own."""
+    if "Exchange" in str(df._jdf.queryExecution().executedPlan()):
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par, key)

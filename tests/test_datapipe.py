@@ -1,5 +1,6 @@
 """Dedup / similarity / textstats / multimodal operator tests."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -170,6 +171,84 @@ class TestMinHashBucketCap:
         assert base == capped
 
 
+class TestMinHashVerify:
+    """Verification of the candidate pairs: exact integer Jaccard, an
+    exact length bound below the set intersection, sizes in longs."""
+
+    def test_length_bound_prunes_without_changing_pairs(self, spark):
+        """Size-skewed near-dups at threshold 0.8: the bound drops the
+        candidates whose size ratio alone fails it, and the output is
+        the DuckDB oracle's, which scores every candidate unbounded."""
+        import random
+
+        import duckdb
+
+        from graphgen_spark.datapipe.dedup import (
+            _doc_grams,
+            lsh_candidate_pairs,
+            minhash_pairs_oracle_sql,
+        )
+
+        rng = random.Random(3)
+        rows = []
+        for c in range(8):
+            base = [f"w{c}_{rng.randrange(10**6)}" for _ in range(34)]
+            extra = [f"x{c}_{i}" for i in range(12)]
+            rows += [
+                (100 * c, " ".join(base)),                  # 32 grams
+                (100 * c + 1, " ".join(base + extra[:1])),  # J = 32/33
+                (100 * c + 2, " ".join(base + extra[:8])),  # J = 0.8 exactly
+                (100 * c + 3, " ".join(base + extra)),      # J = 32/44
+            ]
+        docs = spark.createDataFrame(rows, ["doc_id", "text"])
+
+        grams = {d: set(_doc_grams(t, 3)) for d, t in rows}
+        cands = [
+            (r["a"], r["b"])
+            for r in lsh_candidate_pairs(docs).collect()
+        ]
+        pruned = [
+            (a, b) for a, b in cands
+            if grams[a] & grams[b]
+            and min(len(grams[a]), len(grams[b])) * 10
+            < 8 * max(len(grams[a]), len(grams[b]))
+        ]
+        assert pruned, "corpus must hold candidates the bound drops"
+
+        got = {
+            tuple(r) for r in
+            minhash_verified_pairs(docs, threshold=0.8).collect()
+        }
+        con = duckdb.connect()
+        try:
+            con.register(
+                "documents",
+                pd.DataFrame(rows, columns=["doc_id", "text"]),
+            )
+            want = set(
+                con.sql(minhash_pairs_oracle_sql(threshold=0.8)).fetchall()
+            )
+        finally:
+            con.close()
+        assert got == want
+        assert 800_000 in {j for _, _, j in got}  # J == 0.8 is kept
+
+    def test_large_docs_do_not_overflow(self, spark):
+        """Past ~2 147 shared grams the micro-Jaccard products leave
+        int range; sizes and counts are longs, so a pair of identical
+        2 600-token docs scores 1.0 instead of failing the query."""
+        text = " ".join(f"w{i}" for i in range(2600))
+        docs = spark.createDataFrame(
+            [(0, text), (1, text), (2, "unrelated short doc")],
+            ["doc_id", "text"],
+        )
+        got = {
+            tuple(r) for r in
+            minhash_verified_pairs(docs, threshold=0.5).collect()
+        }
+        assert got == {(0, 1, 1_000_000)}
+
+
 class TestMinHash:
     def test_signature_properties(self, spark, dup_docs):
         sigs = {r["doc_id"]: r["sig"] for r in
@@ -207,17 +286,27 @@ class TestSimHash:
         assert (0, 3) not in got
 
     def test_gram_kernel_matches_sql_gram_array(self, spark):
-        """r7 differential: the Python gram-set kernel behind
-        shingles()/minhash verification must produce the same per-doc
-        shingle SET as the SQL _gram_array formulation it replaced —
-        including short docs (< n tokens), empty text, repeated
-        grams, and multi-space runs."""
+        """r7 differential: the Python gram builder behind shingles()
+        and the MinHash hop must produce the same per-doc shingle SET
+        as the SQL formulation it replaced (kept here as the
+        reference) — including short docs (< n tokens), empty text,
+        repeated grams, and multi-space runs.  Both kernels are
+        checked: ``_gram_sets_df`` and the ``hs`` column the MinHash
+        hop emits beside each signature."""
         from pyspark.sql import functions as F
 
-        from graphgen_spark.datapipe.dedup import (
-            _gram_array,
-            _gram_sets_df,
-        )
+        from graphgen_spark.datapipe.dedup import _gram_sets_df, _sig_sets
+
+        def gram_array(text_col: str, n: int):
+            """SQL reference: DISTINCT non-empty word n-grams."""
+            toks = F.split(F.trim(F.col(text_col)), r"\s+")
+            grams = F.transform(
+                F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+            )
+            return F.filter(
+                F.array_distinct(grams), lambda s: F.length(s) > 0
+            )
 
         rows = [
             (0, "a b c d e f g"),
@@ -227,22 +316,26 @@ class TestSimHash:
             (4, "  spaced   out   tokens "),  # whitespace runs
             (5, "r r r r r r"),              # repeated grams
             (6, " ".join(f"t{i % 9}" for i in range(200))),
+            (7, "   "),                      # blank
         ]
         docs = spark.createDataFrame(rows, ["doc_id", "text"])
         for n in (1, 2, 3, 5):
             sql_side = {
                 r["doc_id"]: set(r["hs"])
                 for r in docs.select(
-                    "doc_id", _gram_array("text", n).alias("hs")
+                    "doc_id", gram_array("text", n).alias("hs")
                 ).collect()
             }
-            py_side = {
-                r["doc_id"]: set(r["hs"])
-                for r in _gram_sets_df(
-                    docs, "text", "doc_id", n
-                ).collect()
-            }
-            assert py_side == sql_side, f"gram divergence at n={n}"
+            assert sql_side[3] == sql_side[7] == set()
+            for kernel in (
+                _gram_sets_df(docs, "text", "doc_id", n),
+                _sig_sets(docs, "text", "doc_id", n, 16, 42),
+            ):
+                got = {r["doc_id"]: r["hs"] for r in kernel.collect()}
+                assert all(len(hs) == len(set(hs)) for hs in got.values())
+                assert {d: set(hs) for d, hs in got.items()} == sql_side, (
+                    f"gram divergence at n={n}"
+                )
 
     def test_kernel_matches_join_formulation(self, spark):
         """r7 differential: the vectorized per-bucket Hamming kernel

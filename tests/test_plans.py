@@ -12,6 +12,7 @@ from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def plan_of(df) -> str:
@@ -164,3 +165,87 @@ class TestRelationalPlans:
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
         assert "LeftAnti" in p
+
+
+class TestMinHashHop:
+    """The MinHash pair stage runs ONE Python hop per doc (signature and
+    gram set together), widened across the session's cores only when
+    its input is narrower than that, and caches three intermediates
+    per dedup call."""
+
+    def test_verified_pairs_single_python_hop(self, spark, sf_dir):
+        from graphgen_spark.datapipe.dedup import minhash_verified_pairs
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        p = plan_of(minhash_verified_pairs(docs, num_perm=16, bands=4))
+        assert n_nodes(p, "MapInPandas") == 1
+        assert "ArrowEvalPython" not in p
+        assert "BatchEvalPython" not in p
+
+    def test_narrow_input_widened(self, spark, sf_dir):
+        from graphgen_spark.datapipe.dedup import minhash_signatures
+
+        par = spark.sparkContext.defaultParallelism
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        assert docs.rdd.getNumPartitions() == 1 < par
+        sigs = minhash_signatures(docs)
+        p = plan_of(sigs)
+        assert re.search(r"hashpartitioning\(xxhash64\(doc_id", p)
+        assert sigs.rdd.getNumPartitions() == par
+
+    def test_wide_input_not_shuffled(self, spark):
+        from graphgen_spark.datapipe.dedup import minhash_signatures
+
+        par = spark.sparkContext.defaultParallelism
+        docs = spark.createDataFrame(
+            [(i, f"doc {i} body text") for i in range(4 * par)],
+            ["doc_id", "text"],
+        )
+        assert docs.rdd.getNumPartitions() == par
+        p = plan_of(minhash_signatures(docs))
+        assert n_nodes(p, "MapInPandas") == 1
+        assert "Exchange" not in p
+
+    def test_dedup_call_caches_three_and_releases(self, spark, sf_dir):
+        from graphgen_spark.datapipe import dedup
+
+        dedup.release_dedup_caches()
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        dedup.minhash_lsh_dedup(docs, num_perm=16, bands=4).collect()
+        # the hop output, the banded table, the verified pairs
+        assert len(dedup._CACHE_HANDLES) == 3
+        # every doc's gram set is cached on disk, not in the heap
+        assert dedup._CACHE_HANDLES[0].storageLevel == StorageLevel.DISK_ONLY
+        assert dedup.release_dedup_caches(blocking=True) == 3
+        assert dedup._CACHE_HANDLES == []
+
+
+class TestWidenNarrow:
+    """``session.widen_narrow``: the one rule both Python-hop entry
+    points (``run_kg_pipeline`` pages, the MinHash hop's docs) use to
+    spread a narrow input over the session's cores."""
+
+    def test_narrow_widened_wide_left(self, spark):
+        from graphgen_spark.session import widen_narrow
+
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(4 * par).withColumnRenamed("id", "k")
+        assert df.rdd.getNumPartitions() == par
+        assert widen_narrow(df, F.col("k")) is df
+        narrow = df.coalesce(1)
+        wide = widen_narrow(narrow, F.xxhash64("k"))
+        assert wide.rdd.getNumPartitions() == par
+        assert re.search(r"hashpartitioning\(xxhash64\(k", plan_of(wide))
+
+    def test_shuffled_input_not_probed(self, spark, sf_dir):
+        """Counting the partitions of an input whose plan holds an
+        exchange would run that exchange as a job of its own: such an
+        input is returned as it is, and no job runs."""
+        from graphgen_spark.session import widen_narrow
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        shuffled = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup())
+        assert widen_narrow(shuffled, F.xxhash64("doc_id")) is shuffled
+        assert set(tracker.getJobIdsForGroup()) == before

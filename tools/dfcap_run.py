@@ -91,8 +91,11 @@ if do_minhash:
 
 if do_sigonly:
     # attribute the policy-independent linear base: the Python MinHash
-    # signature hop alone (no banding, no joins) — cap/banding policy
-    # can only shrink what sits ABOVE this floor
+    # hop alone (no banding, no joins) — cap/banding policy can only
+    # shrink what sits ABOVE this floor.  The hop also emits each doc's
+    # gram set for verification, which this count drops: the floor
+    # includes shipping those sets out of Python (160k pages, 4 cores:
+    # ~18 s signing alone -> ~20 s with the sets)
     from graphgen_spark.datapipe.dedup import minhash_signatures
 
     t0 = time.time()
