@@ -1091,7 +1091,7 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
     # r7b: all n_tables bucket signatures in ONE Arrow strict-fold
-    # kernel pass (bit-identical to the per-table hyperplane_bucket
+    # kernel pass (bit-identical to the per-table _bucket_sql
     # expressions — see the kernel block in similarity.py; the
     # interpreted folds cost ~2.8 s alone at the 22k-vector bench
     # scale).  posexplode's position IS the old lit(t) table id, and

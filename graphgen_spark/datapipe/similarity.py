@@ -17,31 +17,9 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Native dot product over two array columns (codegen'd zip_with +
-    aggregate left fold, no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    """Euclidean norm of an array column — the exact left-fold sum of
-    squares the pairwise cosine uses, factored out so callers compute
-    it ONCE per row instead of once per scored pair (r7: the norm is
-    2/3 of every pairwise cosine's flops; precomputing it per side is
-    float-identical because the fold order and the final
-    dot/(na*nb) arithmetic are unchanged)."""
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> list:
@@ -49,15 +27,16 @@ def _planes(dim: int, n_planes: int, seed: int) -> list:
     return rng.randn(n_planes, dim).tolist()
 
 
-# SQL-text twins of dot_expr/norm_expr/hyperplane_bucket, for building
-# whole projections as ONE parsed expression each (r7b: query-build
-# latency is py4j round-trip-bound — ~1000 socket round trips ≈
-# 0.4-0.6 s per embedding-query build, paid on every bench rep; a
-# selectExpr string is one round trip).  The text parses to the same
-# operators with the same literals (0D = double 0.0) and the same
-# left-fold order, so results are bit-identical to the Column
-# builders — pinned by test_sql_text_twins_bit_identical.  Lambda
-# variables avoid single-letter names that could shadow value columns.
+# The one JVM definition of the dot product, the norm and the
+# hyperplane bucket: SQL text, so a whole projection is ONE parsed
+# expression (r7b: query-build latency is py4j round-trip-bound —
+# ~1000 socket round trips ≈ 0.4-0.6 s per embedding-query build,
+# paid on every bench rep; a selectExpr string is one round trip).
+# Every fold is a left fold from 0D (double 0.0) in element order —
+# the order the Arrow kernels below replicate bit for bit (pinned by
+# tests/test_similarity_kernels.py against ``F.expr`` of this text).
+# Lambda variables avoid single-letter names that could shadow value
+# columns.
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -91,18 +70,6 @@ def _vec_sql(vals) -> str:
     the identical IEEE-754 value — so the parsed literal is
     bit-identical to what ``F.lit`` element-wise would build."""
     return "array(" + ",".join(f"{float(x)!r}D" for x in vals) + ")"
-
-
-def _matrix_lit(rows) -> Column:
-    """array<array<double>> literal built as ONE parsed SQL expression.
-    ``F.lit(nested_list)`` recurses into one py4j round trip per
-    element (a 16x64 matrix = 1000+ driver calls, ~0.5-1 s of pure
-    plan-construction latency per query build — measured r7); a single
-    ``F.expr`` string hands the whole literal to the JVM parser in one
-    call."""
-    return F.expr(
-        "array(" + ",".join(_vec_sql(r) for r in rows) + ")"
-    )
 
 
 # --------------------------------------------------------------------
@@ -164,7 +131,7 @@ def _strict_dots(M: np.ndarray, P: np.ndarray) -> np.ndarray:
 
 
 def _strict_norms(M: np.ndarray) -> np.ndarray:
-    """sqrt of the strict left-fold sum of squares (norm_expr)."""
+    """sqrt of the strict left-fold sum of squares (``_norm_sql``)."""
     acc = np.zeros(M.shape[0], dtype=np.float64)
     for i in range(M.shape[1]):
         acc = acc + M[:, i] * M[:, i]
@@ -228,7 +195,7 @@ def hyperplane_buckets_kernel(
     plane_sets: list, dim: int = 64
 ):
     """pandas UDF: vector -> array<long> of one sign-bit bucket per
-    plane set, bit-identical to ``hyperplane_bucket`` per table."""
+    plane set, bit-identical to ``_bucket_sql`` per table."""
     mats = [np.asarray(p, dtype=np.float64) for p in plane_sets]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -270,7 +237,7 @@ def ivf_cell_kernel(cents: np.ndarray, dim: int = 64):
     ``ivf_topk`` inlines).  The vector's own norm is NOT returned:
     Arrow's pandas serializer nulls NaN doubles on the way back, so a
     NaN norm (NaN-polluted vector) could not round-trip faithfully —
-    callers keep ``norm_expr`` for the norm column (one fold per row,
+    callers keep ``_norm_sql`` for the norm column (one fold per row,
     the cheap part; the 16-dot cell score is what the kernel
     replaces)."""
     C = np.asarray(cents, dtype=np.float64)
@@ -343,37 +310,6 @@ def _struct_gte(sim, best) -> bool:
     if b_nan:
         return False
     return sim >= best
-
-
-def hyperplane_bucket(vec: Column, n_planes: int = 12, seed: int = 42,
-                      dim: int = 64) -> Column:
-    """Random-hyperplane LSH bucket id: sign bits of <v, p_i> packed
-    into a long — pure column expressions over a literal plane matrix."""
-    planes = _planes(dim, n_planes, seed)
-    # ONE nested plane-matrix literal + ONE transform/aggregate chain
-    # for all planes: the per-plane loop created n_planes independent
-    # higher-order lambda conversions (driver-side construction cost,
-    # same pathology as the IVF cell loop).  Bit packing: sign(dot_i)
-    # contributes 2^i, summed exactly as the loop formulation did.
-    pmat = _matrix_lit(planes)
-    dots = F.transform(
-        pmat,
-        lambda p, i: F.when(
-            F.aggregate(
-                F.zip_with(vec, p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0,
-            # 2^i as an exact long (shiftleft needs a literal bit
-            # count; pow is exact in doubles for i <= 52, n_planes
-            # never exceeds 12 here)
-            F.pow(F.lit(2.0), i.cast("double")).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(
-        dots, F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
 
 
 def brute_force_topk(
@@ -631,9 +567,9 @@ def ivf_topk(
     # corpus-side argmax is array_max (same struct ordering as
     # reverse(array_sort)[0]: max (sim, cell) == sim DESC, cell DESC
     # tie-break) instead of a full 16-element sort per row.
-    # one parsed SQL literal for the whole centroid table (see
-    # _matrix_lit: element-wise F.lit cost ~1 s of py4j round trips
-    # per query build at n_cells=16).  Centroid norms via the single
+    # one parsed SQL literal for the whole centroid table (element-wise
+    # F.lit cost ~1 s of py4j round trips per query build at
+    # n_cells=16).  Centroid norms via the single
     # module-level strict-fold implementation (_py_fold_norm) — the
     # SAME function ivf_cell_kernel folds into cn_lits, so the two
     # sides cannot drift.
@@ -667,9 +603,7 @@ def ivf_topk(
         F.coalesce(cell_udf(F.col(vec_col)), F.lit(-1)).alias("cell"),
     )
     # query side and pair scoring built as whole selectExpr strings
-    # (one py4j round trip each — see the _dot_sql block comment); the
-    # parsed operators, literals and fold order are identical to the
-    # old Column-builder formulation, bit-for-bit
+    # (one py4j round trip each — see the _dot_sql block comment)
     probe_sql = (
         "explode(slice(reverse(array_sort(transform({cells}, s -> "
         "named_struct('sim', {dot} / (qn * s.cn), 'cell', s.cell)"

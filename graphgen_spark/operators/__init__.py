@@ -3,11 +3,7 @@
 quiz, judge, partition, generate, evaluate, filter — re-expressed as
 DataFrame transforms + Arrow-vectorized pandas UDFs."""
 
-from graphgen_spark.operators.text import (
-    html_to_text,
-    with_extracted_text,
-    with_language,
-)
+from graphgen_spark.operators.text import html_to_text, with_extracted_text
 from graphgen_spark.operators.chunking import chunk_documents
 from graphgen_spark.operators.kg_extract import (
     extract_records,
@@ -15,19 +11,16 @@ from graphgen_spark.operators.kg_extract import (
     relations_from_records,
 )
 from graphgen_spark.operators.merge import merge_nodes, merge_edges
-from graphgen_spark.operators.linking import link_entities
 from graphgen_spark.operators.components import connected_components
 
 __all__ = [
     "html_to_text",
     "with_extracted_text",
-    "with_language",
     "chunk_documents",
     "extract_records",
     "entities_from_records",
     "relations_from_records",
     "merge_nodes",
     "merge_edges",
-    "link_entities",
     "connected_components",
 ]

@@ -1,13 +1,12 @@
-"""Text-extraction and normalization operators (Arrow-vectorized).
+"""HTML text-extraction operator (Arrow-vectorized).
 
 ``html_to_text`` is the deterministic byte-stable HTML→text kernel the
 BASELINE.json per-row invariant hangs on: same url (same html bytes)
 always yields the same text.  Runs as a Series→Series pandas UDF so the
 plan stays whole-stage-codegen outside the UDF and Arrow-batched inside.
 
-Reference points: the reader validation/decode path
-(``graphgen/models/reader/txt_reader.py:11-36``) and language detection
-(``graphgen/utils/detect_lang.py:1-29``).
+Reference point: the reader validation/decode path
+(``graphgen/models/reader/txt_reader.py:11-36``).
 """
 
 from __future__ import annotations
@@ -15,12 +14,10 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-from graphgen_spark.textkit import count_tokens, detect_main_language
 
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.S)
 _SCRIPT_RE = re.compile(r"<script\b.*?</script>", re.S | re.I)
@@ -71,26 +68,7 @@ def extract_text_udf(html_bytes: pd.Series) -> pd.Series:
     return html_bytes.map(page_text)
 
 
-@pandas_udf(T.StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: detect_main_language(t or ""))
-
-
-@pandas_udf(T.IntegerType())
-def count_tokens_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: count_tokens(t or "")).astype("int32")
-
-
 def with_extracted_text(pages: DataFrame, out_col: str = "extracted_text") -> DataFrame:
     """pages(url, warc_ts, html, ...) -> + extracted_text column."""
     return pages.withColumn(out_col, extract_text_udf(F.col("html")))
 
-
-def with_language(df: DataFrame, text_col: str = "text", out_col: str = "language") -> DataFrame:
-    return df.withColumn(out_col, detect_lang_udf(F.col(text_col)))
-
-
-def doc_trace_id(text_col: Column) -> Column:
-    """Deterministic content-hash trace id (reference md5-of-row ids,
-    ``graphgen/utils/hash.py:12-14``) as a native expression."""
-    return F.concat(F.lit("doc-"), F.md5(text_col))

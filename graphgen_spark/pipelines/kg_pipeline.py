@@ -1,20 +1,24 @@
 """The flagship end-to-end KG construction pipeline.
 
 pages(url, warc_ts, html, text, lang)
-  -> extract_text (Arrow UDF, byte-identical per url)
-  -> chunk (mapInPandas, splitter parity)            [repartition url-hash]
-  -> extract records (mock-LLM grammar + parser)
+  -> ONE Python hop (operators.fused.pages_to_records): html -> text
+     -> chunk (splitter parity) -> mock-LLM extract -> records, linked
+     map-side when the label map fits LABEL_MAP_MAX_ROWS
+                                                     [repartition url-hash]
   -> records_to_graph, the one records -> graph tail every entry point
      shares (this module, the checkpointed materializer, the config
      runner's build_kg node, incremental state):
        entities / relations (projections)
-       -> canonicalize (alias-dict broadcast link + CC labels; drops
-          self-loops on every path, with or without a dictionary)
+       -> canonicalize (alias-dict broadcast link + CC labels when the
+          hop did not link; drops self-loops on every path, with or
+          without a dictionary)
        -> triples, and lazily merge_nodes / merge_edges
                                                      [shuffle by entity]
 
-``fused=True`` replaces the first three hops with one Python hop
-(operators.fused) that can also link map-side; the tail is the same.
+The per-stage docs / chunks frames come from the hop the checkpointed
+commit lands (``fused.pages_to_stages``), built on first access.  The
+composed operators (text -> chunking -> kg_extract) stay DAG nodes of
+their own in ``run_mixed_kg_pipeline`` and the config runner.
 
 Mirrors the reference flagship config
 (``examples/generate/generate_aggregated_qa/aggregated_config.yaml``)
@@ -30,13 +34,17 @@ from pyspark.sql import functions as F
 
 from graphgen_spark.operators.chunking import chunk_documents
 from graphgen_spark.operators.components import connected_components
+from graphgen_spark.operators.fused import (
+    pages_to_records,
+    pages_to_stages,
+    stage_rows,
+)
 from graphgen_spark.operators.kg_extract import (
     entities_from_records,
     extract_records,
     relations_from_records,
 )
 from graphgen_spark.operators.merge import merge_edges, merge_nodes
-from graphgen_spark.operators.text import with_extracted_text
 from graphgen_spark.session import widen_narrow
 
 # Map-side linking collects the label table to the driver for a Python
@@ -319,17 +327,20 @@ def run_kg_pipeline(
     chunk_size: int = 1024,
     chunk_overlap: int = 100,
     precomputed_labels: DataFrame | None = None,
-    fused: bool = False,
+    fused: bool = True,
     persist_records: bool = False,
 ) -> dict[str, DataFrame]:
     """Run the full spine; returns the named intermediate + final
     DataFrames (all lazy except the CC fixpoint inside alias_labels).
 
-    ``fused=True`` produces the records table in one Python hop
-    (operators.fused) — identical output, one worker per task instead
-    of three chained pandas-UDF evals; the per-stage docs/chunks
-    frames are still returned (built lazily from the composable ops)
-    but the triples/nodes/edges path does not execute them.
+    Records come from one Python hop over the pages
+    (``fused.pages_to_records``), linked inside it when the label map
+    fits LABEL_MAP_MAX_ROWS, else by the JVM join in canonicalize.
+    ``docs`` and ``chunks`` are built on first access from
+    ``fused.pages_to_stages``, the hop the checkpointed commit lands;
+    the triples/nodes/edges path never runs them.  ``fused`` accepts
+    only True: the composed chain is ``with_extracted_text`` ->
+    ``chunk_documents`` -> ``extract_records``.
 
     ``persist_records=True`` caches the records table
     (MEMORY_AND_DISK). The nodes and edges plans each reference
@@ -341,28 +352,16 @@ def run_kg_pipeline(
     checkpointed production pipeline gets the same effect by landing
     records as a stage table.
     """
+    if not fused:
+        raise ValueError(
+            "run_kg_pipeline runs only the fused hop; compose "
+            "with_extracted_text -> chunk_documents -> extract_records "
+            "for the per-operator chain"
+        )
     # spread a narrow input by url hash (a 5k-page suite dir is a single
     # row group, so one split): extraction cost is ~uniform per doc and
     # this keeps hot-host pages from skewing one task.
-    par = spark.sparkContext.defaultParallelism
-    pages_in = pages  # pre-repartition input, for the docs plan below
-    pages = widen_narrow(pages_in, F.crc32("url"))
-    widen = pages is not pages_in
-
-    def _build_docs() -> DataFrame:
-        d = with_extracted_text(
-            pages_in, out_col="extracted_text"
-        ).select(
-            "url",
-            F.col("extracted_text").alias("text"),
-            "warc_ts",
-        )
-        return d.repartition(par, F.crc32("url")) if widen else d
-
-    def _build_chunks(d: DataFrame) -> DataFrame:
-        return chunk_documents(
-            d, chunk_size=chunk_size, chunk_overlap=chunk_overlap
-        )
+    pages = widen_narrow(pages, F.crc32("url"))
 
     # The label table is a static asset of the candidate dictionary
     # (built once per release) — batch callers pass precomputed_labels.
@@ -373,42 +372,33 @@ def run_kg_pipeline(
     else:
         labels = None
 
-    if fused:
-        from graphgen_spark.operators.fused import pages_to_records
-
-        # Entity linking: map-side inside the fused UDF when the label
-        # map fits the size guard, else the JVM broadcast join in
-        # canonicalize.
-        label_map_bc = (
-            _label_map_broadcast(spark, labels)
-            if labels is not None
-            else None
-        )
-        records = pages_to_records(
-            pages, chunk_size=chunk_size, chunk_overlap=chunk_overlap,
-            label_map_bc=label_map_bc,
-        )
-        if label_map_bc is not None:
-            labels = None  # records are already canonical
-    else:
-        docs = _build_docs()
-        chunks = _build_chunks(docs)
-        records = extract_records(chunks)
+    # Entity linking: map-side inside the fused UDF when the label map
+    # fits the size guard, else the JVM broadcast join in canonicalize.
+    label_map_bc = (
+        _label_map_broadcast(spark, labels) if labels is not None else None
+    )
+    records = pages_to_records(
+        pages, chunk_size=chunk_size, chunk_overlap=chunk_overlap,
+        label_map_bc=label_map_bc,
+    )
+    if label_map_bc is not None:
+        labels = None  # records are already canonical
     if persist_records:
         from pyspark.storagelevel import StorageLevel
 
         records = records.persist(StorageLevel.MEMORY_AND_DISK)
     out = records_to_graph(records, labels)
 
-    # on the fused path docs/chunks plan construction is deferred to
-    # first access (r7): pure driver-side py4j latency that the
-    # triples/nodes/edges path never needs.  The composed path has
-    # already built them (records derive from them).
-    if fused:
-        out.defer(
-            docs=_build_docs,
-            chunks=lambda: _build_chunks(out["docs"]),
+    # docs/chunks plan construction is deferred to first access (r7):
+    # pure driver-side py4j latency that the triples/nodes/edges path
+    # never needs
+    def _stage(stage: str) -> DataFrame:
+        return stage_rows(
+            pages_to_stages(
+                pages, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+            ),
+            stage,
         )
-    else:
-        out.update({"docs": docs, "chunks": chunks})
+
+    out.defer(docs=lambda: _stage("docs"), chunks=lambda: _stage("chunks"))
     return out

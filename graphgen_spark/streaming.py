@@ -3,10 +3,11 @@
 The reference is batch-only (SURVEY §1.4) — its "incremental" story is
 checkpoint recovery.  At 100 TB a crawl lands continuously, so this
 module adds the Spark-native continuous path: ``readStream`` over the
-landing directory of page files, the SAME deterministic per-batch
-transforms (extract -> chunk -> extract records), and ``foreachBatch``
-into the checkpointed materializer — giving exactly-once-per-content
-semantics for free because every stage key is a content hash.
+landing directory of page files, and ``foreachBatch`` into the
+checkpointed materializer: each micro-batch runs ``run_checkpointed``'s
+one fused Python hop (text, chunks and records of the batch's new
+pages) — giving exactly-once-per-content semantics for free because
+every stage key is a content hash.
 
 ``availableNow`` triggers make the stream testable (drain-and-stop)
 and double as the nightly catch-up mode on a real cluster.

@@ -12,7 +12,6 @@ from graphgen_spark.operators import (
     connected_components,
     entities_from_records,
     extract_records,
-    link_entities,
     merge_edges,
     merge_nodes,
     relations_from_records,
@@ -162,17 +161,21 @@ class TestMerge:
 
 class TestLinking:
     def test_linked_mentions_resolve(self, spark, records):
+        from graphgen_spark.pipelines import alias_labels, canonicalize
+
         ents = entities_from_records(records)
-        nodes = merge_nodes(ents)
-        alias = synth.alias_dictionary_df(spark, N_ENT)
-        linked = link_entities(nodes, alias)
-        total = linked.count()
-        resolved = linked.where(F.col("canonical_id").isNotNull()).count()
-        # every synthetic mention surface form is in the dictionary
-        assert resolved == total
-        # multiple aliases of a hot entity collapse to one canonical id
-        dist = linked.groupBy("canonical_id").count()
-        assert dist.where(F.col("count") > 1).count() > 0
+        labels = alias_labels(synth.alias_dictionary_df(spark, N_ENT))
+        linked, _ = canonicalize(
+            ents, relations_from_records(records), labels
+        )
+        names = {r[0] for r in linked.select("entity_name").collect()}
+        keys = {r[0] for r in labels.select("canonical_key").collect()}
+        # every synthetic mention surface form is in the dictionary, so
+        # every canonicalized name is a label's canonical key
+        assert names and names <= keys
+        # multiple aliases of a hot entity collapse to one canonical name
+        raw = ents.select("entity_name").distinct().count()
+        assert len(names) < raw
 
 
 class TestConnectedComponents:

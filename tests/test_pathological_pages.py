@@ -9,11 +9,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphgen_spark import synth
-from graphgen_spark.pipelines import (
-    alias_labels,
-    run_kg_pipeline,
-    run_mixed_kg_pipeline,
-)
+from graphgen_spark.pipelines import alias_labels, run_kg_pipeline
+
+from tests.conftest import composed_kg
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -64,13 +62,11 @@ class TestPathologicalPages:
         assert "http://x/nonutf8" in urls
 
     def test_fused_path_same_behavior(self, spark, pathological_pages):
-        composed = run_kg_pipeline(
+        composed = composed_kg(
             spark, pathological_pages, chunk_size=256, chunk_overlap=32,
-            fused=False,
         )
         fused = run_kg_pipeline(
             spark, pathological_pages, chunk_size=256, chunk_overlap=32,
-            fused=True,
         )
         c = {tuple(r) for r in composed["triples"]
              .select("subj", "pred", "obj", "url").collect()}
@@ -106,14 +102,13 @@ class TestEntryPointsAgree:
     same pages give the same triples everywhere — self-loop page
     included, with and without an alias dictionary — and the
     checkpointed commit lands the same docs / chunks / records rows as
-    the in-memory pipelines."""
+    the in-memory build and the composed operators."""
 
     @pytest.mark.parametrize("with_dict", [False, True],
                              ids=["no_dict", "dict"])
     def test_same_graph_from_every_entry_point(
         self, spark, pathological_pages, tmp_path, with_dict
     ):
-        from graphgen_spark.operators.text import with_extracted_text
         from graphgen_spark.pipelines.incremental import (
             finalize_kg_state,
             kg_state_from_records,
@@ -122,21 +117,18 @@ class TestEntryPointsAgree:
 
         alias = synth.alias_dictionary_df(spark, 200) if with_dict else None
         kw = {"alias_dict": alias, "chunk_size": 256, "chunk_overlap": 32}
-        composed = run_kg_pipeline(spark, pathological_pages, **kw)
+        # the composed operators: run_mixed_kg_pipeline over
+        # with_extracted_text docs
+        composed = composed_kg(spark, pathological_pages, **kw)
         want = _triple_set(composed["triples"])
         assert want and all(s != o for s, _, o, _ in want)
 
-        fused = run_kg_pipeline(spark, pathological_pages, fused=True, **kw)
+        fused = run_kg_pipeline(spark, pathological_pages, **kw)
         ckpt = run_checkpointed(
             spark, pathological_pages, str(tmp_path / "ckpt"), **kw
         )
-        docs = with_extracted_text(
-            pathological_pages, out_col="content"
-        ).select("url", F.lit("text").alias("type"), "content")
-        mixed = run_mixed_kg_pipeline(spark, docs, **kw)
         assert _triple_set(fused["triples"]) == want
         assert _triple_set(ckpt["triples"]) == want
-        assert _triple_set(mixed["triples"]) == want
 
         # the checkpointed nodes / edges tables (written concurrently,
         # edges semi-joined on entity names) match both in-memory builds
@@ -151,9 +143,9 @@ class TestEntryPointsAgree:
             assert _rows(fused[name], cols) == committed, name
 
         # the stage tables the commit lands from its one fused hop equal
-        # the composed stages; fused records equal them without a
-        # dictionary (with one they are linked map-side, and the graph
-        # equality above covers them)
+        # the composed stages and the in-memory build's; fused records
+        # equal them without a dictionary (with one they are linked
+        # map-side, and the graph equality above covers them)
         stage_cols = {
             "docs": ["url", "text", "warc_ts"],
             "chunks": ["chunk_id", "url", "doc_id", "content", "language",

@@ -45,13 +45,16 @@ class TestFusedPathPlan:
         pages = synth.pages_df(spark, 64, 200).localCheckpoint(
             eager=True
         )
-        out = run_kg_pipeline(spark, pages, fused=True,
+        out = run_kg_pipeline(spark, pages,
                               chunk_size=512, chunk_overlap=64)
-        plan = plan_of(out["triples"])
-        # exactly ONE Python boundary on the steady path
-        assert n_nodes(plan, "MapInPandas") == 1
-        assert "ArrowEvalPython" not in plan
-        assert "BatchEvalPython" not in plan
+        # exactly ONE Python boundary on the steady path, and on the
+        # chunks stage (the hop the checkpointed commit lands, not a
+        # text UDF feeding the chunker)
+        for key in ("triples", "chunks"):
+            plan = plan_of(out[key])
+            assert n_nodes(plan, "MapInPandas") == 1, key
+            assert "ArrowEvalPython" not in plan, key
+            assert "BatchEvalPython" not in plan, key
 
     def test_column_pruning_through_python_hop(self, spark, sf_dir):
         """The fused hop consumes only (url, html): the scan schema
@@ -61,7 +64,7 @@ class TestFusedPathPlan:
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         pages = pages_from_doc_ids(docs, n_entities=200)
-        out = run_kg_pipeline(spark, pages, fused=True,
+        out = run_kg_pipeline(spark, pages,
                               chunk_size=512, chunk_overlap=64)
         plan = plan_of(out["triples"])
         assert "ReadSchema" in plan

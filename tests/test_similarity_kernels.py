@@ -1,13 +1,14 @@
 """Differential tests: the Arrow strict-fold kernels
 (hyperplane_buckets_kernel, ivf_cell_kernel) must be
-BIT-identical to the higher-order-function expressions they replace
-(hyperplane_bucket / the ivf cell-score max-struct), including on
-adversarial rows: zero vectors, -0.0 vectors, denormals, huge values,
-NaN and ±inf elements, NULL vectors and ragged (len != dim) vectors.
+BIT-identical to ``F.expr`` of the SQL text they replace
+(``_bucket_sql`` / the ivf cell-score max-struct over ``_dot_sql`` and
+``_norm_sql``), including on adversarial rows: zero vectors, -0.0
+vectors, denormals, huge values, NaN and ±inf elements, NULL vectors
+and ragged (len != dim) vectors.
 
-The expression side is the ground truth — it is what the frozen
-DuckDB oracles replay — so any divergence here is a red row waiting
-to happen."""
+The SQL text is the ground truth — it is the one JVM definition
+``lsh_topk`` and ``ivf_topk`` run, and what the frozen DuckDB oracles
+replay — so any divergence here is a red row waiting to happen."""
 
 import math
 
@@ -16,13 +17,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphgen_spark.datapipe.similarity import (
+    _bucket_sql,
+    _dot_sql,
+    _norm_sql,
     _planes,
     _vec_sql,
-    dot_expr,
-    hyperplane_bucket,
     hyperplane_buckets_kernel,
     ivf_cell_kernel,
-    norm_expr,
 )
 
 
@@ -51,25 +52,29 @@ def adversarial_df(spark):
 
 
 def test_bucket_kernel_bit_identical(spark, adversarial_df):
-    plane_sets = [_planes(64, 10, 42 + 1000 * t) for t in range(3)]
-    expr_cols = [
-        hyperplane_bucket(F.col("v"), 10, 42 + 1000 * t).alias(f"b{t}")
-        for t in range(3)
-    ]
-    exp = {
-        r["id"]: [r[f"b{t}"] for t in range(3)]
-        for r in adversarial_df.select("id", *expr_cols).collect()
-    }
-    udf = hyperplane_buckets_kernel(plane_sets, 64)
-    got = {
-        r["id"]: r["bs"]
-        for r in adversarial_df.select(
-            "id", udf(F.col("v")).alias("bs")
-        ).collect()
-    }
-    assert set(exp) == set(got)
-    for i in exp:
-        assert got[i] == exp[i], (i, exp[i], got[i])
+    # three 10-plane tables in one kernel pass, then the 6-plane
+    # single table lsh_topk's query side runs as text
+    for n_planes, seeds in ((10, [42, 1042, 2042]), (6, [42])):
+        expr_cols = [
+            F.expr(_bucket_sql("v", n_planes, seed)).alias(f"b{t}")
+            for t, seed in enumerate(seeds)
+        ]
+        exp = {
+            r["id"]: [r[f"b{t}"] for t in range(len(seeds))]
+            for r in adversarial_df.select("id", *expr_cols).collect()
+        }
+        udf = hyperplane_buckets_kernel(
+            [_planes(64, n_planes, seed) for seed in seeds], 64
+        )
+        got = {
+            r["id"]: r["bs"]
+            for r in adversarial_df.select(
+                "id", udf(F.col("v")).alias("bs")
+            ).collect()
+        }
+        assert set(exp) == set(got)
+        for i in exp:
+            assert got[i] == exp[i], (n_planes, i, exp[i], got[i])
 
 
 def test_ivf_cell_norm_kernel_bit_identical(spark, adversarial_df):
@@ -87,27 +92,21 @@ def test_ivf_cell_norm_kernel_bit_identical(spark, adversarial_df):
             acc = acc + float(v) * float(v)
         return math.sqrt(acc)
 
-    cell_lits = F.expr(
-        "array(" + ",".join(
-            "named_struct('c', {}, 'cn', {!r}D, 'cell', {})".format(
-                _vec_sql(cents[i]), float(_fold_norm(cents[i])), i
-            )
-            for i in range(16)
-        ) + ")"
-    )
-    vn = norm_expr(F.col("v"))
-    scores = F.transform(
-        cell_lits,
-        lambda s: F.struct(
-            (dot_expr(F.col("v"), s["c"]) / (vn * s["cn"])).alias("sim"),
-            s["cell"].alias("cell"),
-        ),
+    cells_sql = "array(" + ",".join(
+        "named_struct('c', {}, 'cn', {!r}D, 'cell', {})".format(
+            _vec_sql(cents[i]), float(_fold_norm(cents[i])), i
+        )
+        for i in range(16)
+    ) + ")"
+    best_sql = (
+        f"array_max(transform({cells_sql}, s -> named_struct("
+        f"'sim', {_dot_sql('v', 's.c')} / ({_norm_sql('v')} * s.cn), "
+        "'cell', s.cell))).cell"
     )
     exp = {
         r["id"]: r["cell"]
         for r in adversarial_df.select(
-            "id",
-            F.array_max(scores)["cell"].alias("cell"),
+            "id", F.expr(best_sql).alias("cell")
         ).collect()
     }
     udf = ivf_cell_kernel(cents, 64)
@@ -132,9 +131,10 @@ def test_ivf_zero_norm_raises_both_paths(spark):
         [(0, [0.0] * 64)], "id long, v array<double>"
     )
 
-    vn = norm_expr(F.col("v"))
-    expr_sim = dot_expr(F.col("v"), F.expr(_vec_sql(cents[0]))) / (
-        vn * F.lit(float(np.sqrt((cents[0] * cents[0]).sum())))
+    cn = float(np.sqrt((cents[0] * cents[0]).sum()))
+    expr_sim = F.expr(
+        f"{_dot_sql('v', _vec_sql(cents[0]))} / ({_norm_sql('v')} "
+        f"* {cn!r}D)"
     )
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         df.select(expr_sim.alias("s")).collect()
@@ -144,65 +144,9 @@ def test_ivf_zero_norm_raises_both_paths(spark):
         df.select(udf(F.col("v")).alias("cc")).collect()
 
 
-def test_sql_text_twins_bit_identical(spark, adversarial_df):
-    """The SQL-text builders (_dot_sql/_norm_sql/_bucket_sql) must be
-    BIT-identical to the Column builders (dot_expr/norm_expr/
-    hyperplane_bucket) — lsh_topk joins corpus buckets from the
-    kernel against query buckets from _bucket_sql, so a drift in
-    either text silently empties the join."""
-    import struct as st
-
-    from graphgen_spark.datapipe.similarity import (
-        _bucket_sql,
-        _dot_sql,
-        _norm_sql,
-        _vec_sql,
-    )
-
-    df = adversarial_df.withColumn("w", F.reverse("v"))
-
-    def bits(x):
-        return None if x is None else st.pack("<d", x)
-
-    # norm
-    exp = {r["id"]: bits(r["x"]) for r in df.select(
-        "id", norm_expr(F.col("v")).alias("x")).collect()}
-    got = {r["id"]: bits(r["x"]) for r in df.selectExpr(
-        "id", f"{_norm_sql('v')} AS x").collect()}
-    assert got == exp
-
-    # dot over two columns
-    exp = {r["id"]: bits(r["x"]) for r in df.select(
-        "id", dot_expr(F.col("v"), F.col("w")).alias("x")).collect()}
-    got = {r["id"]: bits(r["x"]) for r in df.selectExpr(
-        "id", f"{_dot_sql('v', 'w')} AS x").collect()}
-    assert got == exp
-
-    # dot against a literal vector
-    lit = _vec_sql(np.random.RandomState(5).randn(64))
-    exp = {r["id"]: bits(r["x"]) for r in df.select(
-        "id", dot_expr(F.col("v"), F.expr(lit)).alias("x")).collect()}
-    got = {r["id"]: bits(r["x"]) for r in df.selectExpr(
-        "id", f"{_dot_sql('v', lit)} AS x").collect()}
-    assert got == exp
-
-    # hyperplane bucket (the lsh_topk query-side text) vs BOTH the
-    # Column builder and the corpus-side kernel
-    exp = {r["id"]: r["b"] for r in df.select(
-        "id", hyperplane_bucket(F.col("v"), 6, 42).alias("b")
-    ).collect()}
-    got = {r["id"]: r["b"] for r in df.selectExpr(
-        "id", f"{_bucket_sql('v', 6, 42)} AS b").collect()}
-    assert got == exp
-    udf = hyperplane_buckets_kernel([_planes(64, 6, 42)], 64)
-    got_k = {r["id"]: r["bs"][0] for r in df.select(
-        "id", udf(F.col("v")).alias("bs")).collect()}
-    assert got_k == exp
-
-
 def test_bucket_kernel_clean_bulk(spark):
     """Bulk random vectors (the vectorized path, no adversarial rows):
-    buckets equal the expression's for every table."""
+    buckets equal the SQL text's for every table."""
     rng = np.random.RandomState(11)
     vecs = rng.randn(3000, 64)
     df = spark.createDataFrame(
@@ -213,7 +157,7 @@ def test_bucket_kernel_clean_bulk(spark):
     exp = {
         r["id"]: r["b"]
         for r in df.select(
-            "id", hyperplane_bucket(F.col("v"), 6, 42).alias("b")
+            "id", F.expr(_bucket_sql("v", 6, 42)).alias("b")
         ).collect()
     }
     udf = hyperplane_buckets_kernel(plane_sets, 64)

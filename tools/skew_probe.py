@@ -28,7 +28,7 @@ GATE = 4.0
 def main() -> None:
     from graphgen_spark import synth
     from graphgen_spark.session import get_spark
-    from graphgen_spark.pipelines import run_kg_pipeline
+    from graphgen_spark.pipelines import kg_pipeline, run_kg_pipeline
 
     spark = get_spark(
         master="local[8]",
@@ -41,11 +41,12 @@ def main() -> None:
     n_ent = synth.n_entities_for(N_PAGES)
     pages = synth.pages_df(spark, N_PAGES, n_ent)
     alias = synth.alias_dictionary_df(spark, n_ent)
-    # the NON-fused path: linking is the explicit JVM broadcast join,
-    # merge is the salted two-phase aggregate — the stages under test
+    # a zero label-map guard keeps linking out of the extraction hop:
+    # linking is the explicit JVM broadcast join in canonicalize, merge
+    # is the salted two-phase aggregate — the stages under test
+    kg_pipeline.LABEL_MAP_MAX_ROWS = 0
     out = run_kg_pipeline(
-        spark, pages, alias_dict=alias,
-        chunk_size=512, chunk_overlap=64, fused=False,
+        spark, pages, alias_dict=alias, chunk_size=512, chunk_overlap=64,
     )
     out["edges"].count()  # executes link + both merges
 
