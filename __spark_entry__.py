@@ -66,8 +66,8 @@ def _pages_views(spark: SparkSession, sf_dir: str):
         cur = docs.rdd.getNumPartitions()
         par = spark.sparkContext.defaultParallelism
         # row count from the parquet footer — free on the driver, no
-        # Spark job (the same no-extra-action discipline as the
-        # simhash sizeInBytes gate)
+        # Spark job (the same no-extra-action discipline as the CC
+        # driver gate's size statistic, components._stats_prove_small)
         import pyarrow.parquet as _pq
 
         try:

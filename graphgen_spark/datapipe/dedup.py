@@ -737,66 +737,41 @@ def simhash_signatures(
     return docs.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
 
 
-# measured r7 crossover for the per-bucket Hamming kernel vs the JVM
-# band self-join (see simhash_dup_pairs docstring): the kernel's flat
-# costs lose below ~10k docs and win quadratically-in-bucket-occupancy
-# above.  Expressed as the input's Catalyst sizeInBytes (~120
-# compressed bytes/doc on parquet corpora => ~10k docs) — a free
-# driver-side statistic, never a job and never a host property.
-# In-memory frames (LocalRelation) report their actual computed size,
-# so small test corpora take the join path like small parquet ones;
-# only a failed statistics lookup falls back to the kernel path (the
-# correct direction at scale).
-SIMHASH_KERNEL_MIN_BYTES = 1_200_000
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()
-        )
-    except Exception:
-        return 1 << 62
-
-
 def simhash_dup_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     max_hamming: int = 3, bands: int = 4,
-    kernel: bool | None = None,
 ) -> DataFrame:
     """(a, b, hamming): banded SimHash blocking (pigeonhole: any pair
     within Hamming distance < bands shares at least one exact band),
     then exact Hamming verification.
 
-    r7 kernel: the JVM band self-join materialized every in-bucket
-    candidate pair as a join output row before the Hamming filter —
-    19M rows / ~5 s at 50k docs, because real corpora concentrate
-    band values (majority votes correlate across docs) into hot
-    buckets whose C(m,2) terms dominate.  The filter keeps ~nothing,
-    so the pair stream is pure overhead.  Instead the banded table is
-    repartitioned+sorted by (band, key) and a ``mapInPandas`` kernel
-    scores each bucket with a vectorized XOR + popcount-LUT block
-    sweep, emitting ONLY pairs with hamming <= max_hamming — the
-    19M-row stream never exists as engine rows.  Filter-before-
-    distinct is equivalent to the old distinct-before-filter (the
-    filter is deterministic per row), so output is bit-identical.
-    Per-task memory is one shuffle partition of narrow
-    (doc_id, sig, band, key) rows plus a bounded 512-row comparison
-    block.
+    A band self-join would materialize every in-bucket candidate pair
+    as a join output row before the Hamming filter — 19M rows / ~5 s
+    at 50k docs, because real corpora concentrate band values
+    (majority votes correlate across docs) into hot buckets whose
+    C(m,2) terms dominate, and the filter keeps ~nothing.  Instead the
+    banded table is hash-repartitioned and sorted by (band, key) and
+    a ``mapInPandas`` kernel scores the in-bucket pairs with a
+    vectorized XOR + popcount-LUT sweep, emitting ONLY pairs with
+    hamming <= max_hamming.  Output equals the join formulation's
+    (``test_kernel_matches_join_formulation``).
 
-    Crossover (measured r7): the kernel's fixed cost (one repartition
-    + a Python hop) loses to the JVM join below ~10k docs (sf0.1:
-    0.37 -> 0.62 s) and wins 3.7x at 50k docs (5.1 -> 1.4 s), with the
-    gap widening quadratically in bucket occupancy.  ``kernel=None``
-    (default) picks the path from the input's Catalyst size statistic
-    at the measured crossover — free on the driver, no extra job
-    (VERDICT r6 #4's adaptive-path pattern); both formulations are
-    pinned identical by test_kernel_matches_join_formulation."""
-    if kernel is None:
-        kernel = _plan_size_bytes(docs) >= SIMHASH_KERNEL_MIN_BYTES
-    sigs = _persist(simhash_signatures(docs, text_col, id_col))
-    # scanned by both sides of the band self-join
+    Memory is bounded by construction:
+
+    - the repartition carries no partition count, so AQE sizes and
+      coalesces the shuffle; hash partitioning keeps each bucket in
+      one partition under coalescing;
+    - the kernel streams its sorted partition: each Arrow batch scores
+      its complete buckets and carries only the open last bucket into
+      the next batch (scored once the batches run out);
+    - the upper-triangle pairs of a batch's buckets are scored
+      512 x 512 at a time, many small buckets in one numpy pass (a
+      pass holds at least one row's partners, so only a bucket of
+      more than 512 x 512 members makes a pass larger).
+
+    Per-task memory is one batch, plus the largest bucket, plus one
+    512 x 512 block of pairs."""
+    sigs = simhash_signatures(docs, text_col, id_col)
     width = 64 // bands
     band_structs = [
         F.struct(
@@ -811,37 +786,9 @@ def simhash_dup_pairs(
         "doc_id", "simhash",
         F.explode(F.array(*band_structs)).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.key")
-
-    if not kernel:
-        # small corpus: the straight band self-join + bit_count wins
-        # (its candidate stream is small enough that the join beats
-        # the kernel's flat repartition + Python-hop cost)
-        left = banded.select(
-            F.col("doc_id").alias("a"),
-            F.col("simhash").alias("sig_a"), "band", "key",
-        )
-        right = banded.select(
-            F.col("doc_id").alias("b"),
-            F.col("simhash").alias("sig_b"), "band", "key",
-        )
-        return (
-            left.join(right, ["band", "key"])
-            .where(F.col("a") < F.col("b"))
-            .select(
-                "a", "b",
-                F.bit_count(
-                    F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-                ).alias("hamming"),
-            )
-            .distinct()
-            .where(F.col("hamming") <= max_hamming)
-        )
-
-    spark = docs.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    arranged = banded.repartition(
-        n_part, "band", "key"
-    ).sortWithinPartitions("band", "key")
+    arranged = banded.repartition("band", "key").sortWithinPartitions(
+        "band", "key"
+    )
 
     out_schema = T.StructType([
         T.StructField("a", T.LongType(), False),
@@ -851,64 +798,68 @@ def simhash_dup_pairs(
     max_h = int(max_hamming)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate the (narrow) partition so buckets split across
-        # Arrow batches stay whole; rows arrive sorted by (band, key)
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            yield pd.DataFrame(
-                {"a": pd.Series(dtype="int64"),
-                 "b": pd.Series(dtype="int64"),
-                 "hamming": pd.Series(dtype="int32")}
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        sig = pdf["simhash"].to_numpy(dtype=np.int64).view(np.uint64)
-        band = pdf["band"].to_numpy()
-        key = pdf["key"].to_numpy()
-        # bucket boundaries in the sorted order
-        change = np.flatnonzero(
-            (band[1:] != band[:-1]) | (key[1:] != key[:-1])
-        ) + 1
-        bounds = np.concatenate(([0], change, [len(pdf)]))
         lut = np.array(
             [bin(i).count("1") for i in range(256)], dtype=np.uint8
         )
-        out_a, out_b, out_h = [], [], []
         blk = 512
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            m = e - s
-            if m < 2:
-                continue
-            g_ids = ids[s:e]
-            g_sig = sig[s:e]
-            for i0 in range(0, m, blk):
-                i1 = min(i0 + blk, m)
-                x = g_sig[i0:i1, None] ^ g_sig[None, :]
-                h = lut[
-                    np.ascontiguousarray(x).view(np.uint8)
-                    .reshape(i1 - i0, m, 8)
-                ].sum(axis=2, dtype=np.int64)
-                mask = (h <= max_h) & (
-                    g_ids[i0:i1, None] < g_ids[None, :]
+
+        def score(pdf, bounds):
+            # every pair of rows r < r2 in one bucket
+            # [bounds[k], bounds[k+1]): row r has cnt[r] partners
+            # after it; a pass takes rows while their partners total
+            # at most blk * blk (and at least one row)
+            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            sig = pdf["simhash"].to_numpy(dtype=np.int64).view(np.uint64)
+            n = bounds[-1]
+            cnt = np.repeat(bounds[1:], np.diff(bounds)) - np.arange(n) - 1
+            cum = np.cumsum(cnt)
+            out_a, out_b, out_h = [], [], []
+            r0 = 0
+            while r0 < n:
+                done = cum[r0 - 1] if r0 else 0
+                r1 = max(r0 + 1, int(np.searchsorted(
+                    cum, done + blk * blk, side="right"
+                )))
+                c = cnt[r0:r1]
+                ii = np.repeat(np.arange(r0, r1), c)
+                jj = ii + 1 + np.arange(len(ii)) - np.repeat(
+                    np.cumsum(c) - c, c
                 )
-                ii, jj = np.nonzero(mask)
-                if len(ii):
-                    out_a.append(g_ids[i0:i1][ii])
-                    out_b.append(g_ids[jj])
-                    out_h.append(h[ii, jj])
-        if out_a:
-            yield pd.DataFrame({
-                "a": np.concatenate(out_a),
-                "b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_h).astype(np.int32),
-            })
-        else:
-            yield pd.DataFrame(
-                {"a": pd.Series(dtype="int64"),
-                 "b": pd.Series(dtype="int64"),
-                 "hamming": pd.Series(dtype="int32")}
-            )
+                h = lut[
+                    (sig[ii] ^ sig[jj]).view(np.uint8).reshape(-1, 8)
+                ].sum(axis=1, dtype=np.int64)
+                keep = (h <= max_h) & (ids[ii] != ids[jj])
+                a, b = ids[ii[keep]], ids[jj[keep]]
+                out_a.append(np.minimum(a, b))
+                out_b.append(np.maximum(a, b))
+                out_h.append(h[keep].astype(np.int32))
+                r0 = r1
+            if out_a:
+                yield pd.DataFrame({
+                    "a": np.concatenate(out_a),
+                    "b": np.concatenate(out_b),
+                    "hamming": np.concatenate(out_h),
+                })
+
+        # rows arrive sorted by (band, key); a batch's last bucket may
+        # continue in the next batch, so it is carried, not scored
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            band = pdf["band"].to_numpy()
+            key = pdf["key"].to_numpy()
+            bounds = np.concatenate((
+                [0],
+                np.flatnonzero(
+                    (band[1:] != band[:-1]) | (key[1:] != key[:-1])
+                ) + 1,
+                [len(pdf)],
+            ))
+            carry = pdf.iloc[bounds[-2]:]
+            yield from score(pdf, bounds[:-1])
+        if carry is not None:
+            yield from score(carry, np.array([0, len(carry)]))
 
     pairs = arranged.mapInPandas(gen, schema=out_schema)
     # a pair can collide in several bands — dedupe the (tiny) survivor

@@ -114,8 +114,7 @@ def _stats_prove_small(df: DataFrame, bound: int = 8 << 20) -> bool:
     well-estimated inputs.  It is still an estimate — a
     ``localCheckpoint`` of an ``explode`` reports 32 B for 600k rows —
     so the caller bounds its collect with ``limit(gate + 1)``, never
-    with this statistic.  Same decide-from-free-driver-statistics
-    pattern as the simhash kernel crossover (dedup.py)."""
+    with this statistic."""
     try:
         return (
             int(

@@ -19,12 +19,9 @@ aggregation; no central graph store exists.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window
-from pyspark.sql.functions import pandas_udf
 
 SEP = "<SEP>"
 MAX_SUMMARY_TOKENS = 200
@@ -64,31 +61,6 @@ def _merge_capped(partials_col: str, cap: int = MAX_MERGED_VALUES):
     )
 
 
-@pandas_udf(T.StringType())
-def summarize_if_long_udf(description: pd.Series) -> pd.Series:
-    """Deterministic stand-in for the reference's LLM summary gate
-    (>=200 tokens → summarize the first 200 tokens).  Kept as the
-    Python-kernel reference implementation; the hot path uses the
-    native-expression equivalent below (parity-tested)."""
-    from graphgen_spark.textkit import count_tokens, truncate_tokens
-
-    def gate(desc: str) -> str:
-        if desc is None:
-            return ""
-        if count_tokens(desc) < MAX_SUMMARY_TOKENS:
-            return desc
-        return truncate_tokens(desc, MAX_SUMMARY_TOKENS)
-
-    return description.map(gate)
-
-
-@pandas_udf(T.IntegerType())
-def _tok_len_udf(text: pd.Series) -> pd.Series:
-    from graphgen_spark.textkit import count_tokens
-
-    return text.map(lambda t: count_tokens(t or "")).astype("int32")
-
-
 # Native (whole-stage-codegen) summary gate.  The textkit token regex
 # is Java-compatible; (?U) makes Java's \s match unicode whitespace
 # like Python's.  Truncation to the first K tokens = the prefix ending
@@ -97,6 +69,8 @@ def _tok_len_udf(text: pd.Series) -> pd.Series:
 # (\s* token) reproduces text[:spans[K-1][1]] exactly.  Replacing the
 # two chained pandas UDFs (summarize + count) with these expressions
 # removed a ~19 s ArrowEvalPython hop from the sf0.1 edge finalize.
+# TestMergeCapParity pins them against textkit.count_tokens/
+# truncate_tokens, the Python definition of the gate.
 _TOK_JAVA = r"(?U)[A-Za-z0-9_]+|[一-鿿]|[^\sA-Za-z0-9_一-鿿]"
 _TRUNC_JAVA = (
     r"(?U)^(?:\s*+(?:[A-Za-z0-9_]++|[一-鿿]|[^\sA-Za-z0-9_一-鿿]))"

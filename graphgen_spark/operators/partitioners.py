@@ -273,7 +273,8 @@ def _greedy_partition_pdf(
 # bounded sub-frames before the greedy growth (each sub-frame grows
 # communities over its own units only; greedy growth can't cross a
 # bucket exactly like it can't cross a component).  Mirrors the
-# size gate on the CC driver union-find (components.py).
+# size gate on the CC driver union-find (components.py), and like it
+# is read at call time, not passed in.
 COMPONENT_UNIT_GATE = 200_000
 
 
@@ -286,7 +287,6 @@ def _partition_with(
     unit_sampling: str = "random",
     anchor_type: str | None = None,
     anchor_names: DataFrame | None = None,
-    component_unit_gate: int = COMPONENT_UNIT_GATE,
 ) -> DataFrame:
     from pyspark.sql import Window
 
@@ -327,7 +327,7 @@ def _partition_with(
     # at any parallelism (xxhash64 of the unit key, not a task id)
     w = Window.partitionBy("component")
     n_buckets = F.ceil(
-        F.count(F.lit(1)).over(w) / F.lit(component_unit_gate)
+        F.count(F.lit(1)).over(w) / F.lit(COMPONENT_UNIT_GATE)
     )
     bucketed = units.withColumn(
         "_bucket",
@@ -676,9 +676,7 @@ def _membership_to_rows(
 
 
 def leiden_partition(nodes, edges, max_size=20, resolution=1.0,
-                     seed=42,
-                     component_unit_gate: int = COMPONENT_UNIT_GATE,
-                     ) -> DataFrame:
+                     seed=42) -> DataFrame:
     """Community detection per connected component: leidenalg+igraph
     when importable (reference parity,
     ``models/partitioner/leiden_partitioner.py:16-117``), else the
@@ -696,7 +694,7 @@ def leiden_partition(nodes, edges, max_size=20, resolution=1.0,
     Giant-component gate (same hazard the greedy partitioners gate in
     ``_partition_with``): a web-scale giant component must not land in
     one task's pandas frame running the pure-Python modularity search.
-    Components above ``component_unit_gate`` units are split into
+    Components above ``COMPONENT_UNIT_GATE`` units are split into
     deterministic hash buckets of their node units BEFORE the groupBy;
     an edge unit rides with its ``a`` endpoint's bucket and survives
     only when both endpoints share the bucket (``_leiden_index``
@@ -735,7 +733,7 @@ def leiden_partition(nodes, edges, max_size=20, resolution=1.0,
 
     w = Window.partitionBy("component")
     n_buckets = F.ceil(
-        F.count(F.lit(1)).over(w) / F.lit(component_unit_gate)
+        F.count(F.lit(1)).over(w) / F.lit(COMPONENT_UNIT_GATE)
     )
     # ONE materialization of the CC-join + window-count pipeline: the
     # gated branch probes it with isEmpty() at call time and the
@@ -757,7 +755,7 @@ def leiden_partition(nodes, edges, max_size=20, resolution=1.0,
     )
     gated = _gated_leiden_rows(
         bucketed.where(F.col("_nb") > 1), max_size, resolution, seed,
-        have_leiden, component_unit_gate,
+        have_leiden, COMPONENT_UNIT_GATE,
     )
     return ungated.unionByName(gated)
 

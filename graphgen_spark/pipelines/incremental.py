@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphgen_spark.operators.merge import (
-    MAX_MERGED_VALUES,
     _capped_aggs,
+    _merge_capped,
     finalize_edges,
     finalize_nodes,
     node_type_counts,
@@ -52,16 +52,6 @@ def kg_state_from_records(
     }
 
 
-def _merge_capped_arrays(col: str) -> F.Column:
-    return F.slice(
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list(col)))
-        ),
-        1,
-        MAX_MERGED_VALUES,
-    )
-
-
 def merge_kg_state(
     a: dict[str, DataFrame], b: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
@@ -72,8 +62,8 @@ def merge_kg_state(
         a["node_aggs"].unionByName(b["node_aggs"])
         .groupBy("entity_name")
         .agg(
-            _merge_capped_arrays("descs").alias("descs"),
-            _merge_capped_arrays("srcs").alias("srcs"),
+            _merge_capped("descs").alias("descs"),
+            _merge_capped("srcs").alias("srcs"),
             F.sum("n_mentions").alias("n_mentions"),
         )
     )
@@ -86,8 +76,8 @@ def merge_kg_state(
         a["edge_aggs"].unionByName(b["edge_aggs"])
         .groupBy("src_id", "tgt_id")
         .agg(
-            _merge_capped_arrays("descs").alias("descs"),
-            _merge_capped_arrays("srcs").alias("srcs"),
+            _merge_capped("descs").alias("descs"),
+            _merge_capped("srcs").alias("srcs"),
             F.sum("n_mentions").alias("n_mentions"),
         )
     )

@@ -92,8 +92,3 @@ def truncate_tokens(text: str, max_tokens: int) -> str:
 def md5_hex(text: str) -> str:
     return hashlib.md5(text.encode("utf-8")).hexdigest()
 
-
-def trace_id(prefix: str, payload: str) -> str:
-    """Deterministic content-hash id, mirroring the reference's
-    md5-of-row trace ids (``graphgen/utils/hash.py:12-14``)."""
-    return f"{prefix}-{md5_hex(payload)}"

@@ -6,9 +6,11 @@ silently dropped four previously hash-green queries past that window
 regression impossible to ship quietly.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tools.check_contract import (  # noqa: E402

@@ -339,9 +339,15 @@ class TestSimHash:
 
     def test_kernel_matches_join_formulation(self, spark):
         """r7 differential: the vectorized per-bucket Hamming kernel
-        must emit exactly what the old JVM band-self-join + bit_count
-        formulation did, on a corpus with planted near-dups, exact
-        dups, token-flip variants, and band-collision-heavy rows."""
+        must emit exactly what the JVM band-self-join + bit_count
+        formulation (kept inline as the reference) does, on a corpus
+        with planted near-dups, exact dups, token-flip variants, and
+        band-collision-heavy rows.
+
+        A second pass streams 7-row Arrow batches over the corpus plus
+        800 exact copies of one doc: every bucket of the copies spans
+        ~115 batches (the carried open bucket), and its 319,600 pairs
+        take two 512 x 512 scoring passes."""
         import random
 
         from pyspark.sql import functions as F
@@ -361,19 +367,13 @@ class TestSimHash:
             if d % 11 == 0:  # exact dup
                 rows.append((d + 20000, " ".join(toks)))
         docs = spark.createDataFrame(rows, ["doc_id", "text"])
+        # ids out of row order, so a bucket's rows are not id-sorted
+        copies = spark.createDataFrame(
+            [(30000 + c * 257 % 800, rows[1][1]) for c in range(800)],
+            ["doc_id", "text"],
+        )
 
-        for max_hamming, bands in [(3, 4), (7, 8), (0, 4)]:
-            # kernel=True forces the bucket kernel (this corpus is
-            # below the adaptive crossover, where the default takes
-            # the join path — which would compare join vs join)
-            new = {
-                (r["a"], r["b"], r["hamming"])
-                for r in simhash_dup_pairs(
-                    docs, max_hamming=max_hamming, bands=bands,
-                    kernel=True,
-                ).collect()
-            }
-            # old formulation, inline (band self-join + bit_count)
+        def join_pairs(docs, max_hamming, bands):
             sigs = simhash_signatures(docs)
             width = 64 // bands
             band_structs = [
@@ -397,20 +397,29 @@ class TestSimHash:
                 F.col("doc_id").alias("b"),
                 F.col("simhash").alias("sig_b"), "band", "key",
             )
+            return (
+                left.join(right, ["band", "key"])
+                .where(F.col("a") < F.col("b"))
+                .select(
+                    "a", "b",
+                    F.bit_count(
+                        F.col("sig_a").bitwiseXOR(F.col("sig_b"))
+                    ).alias("hamming"),
+                )
+                .distinct()
+                .where(F.col("hamming") <= max_hamming)
+            )
+
+        for max_hamming, bands in [(3, 4), (7, 8), (0, 4)]:
+            new = {
+                (r["a"], r["b"], r["hamming"])
+                for r in simhash_dup_pairs(
+                    docs, max_hamming=max_hamming, bands=bands,
+                ).collect()
+            }
             old = {
                 (r["a"], r["b"], r["hamming"])
-                for r in (
-                    left.join(right, ["band", "key"])
-                    .where(F.col("a") < F.col("b"))
-                    .select(
-                        "a", "b",
-                        F.bit_count(
-                            F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-                        ).alias("hamming"),
-                    )
-                    .distinct()
-                    .where(F.col("hamming") <= max_hamming)
-                ).collect()
+                for r in join_pairs(docs, max_hamming, bands).collect()
             }
             assert new == old, (
                 f"kernel/join divergence at max_hamming={max_hamming} "
@@ -418,6 +427,28 @@ class TestSimHash:
                 f"only_old={sorted(old - new)[:5]}"
             )
             assert new, f"vacuous differential at bands={bands}"
+
+        big = docs.unionByName(copies)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(conf)
+        for max_hamming, bands in [(3, 4), (7, 8), (0, 4)]:
+            old = join_pairs(big, max_hamming, bands).localCheckpoint()
+            spark.conf.set(conf, "7")
+            try:
+                new = simhash_dup_pairs(
+                    big, max_hamming=max_hamming, bands=bands,
+                ).localCheckpoint()
+            finally:
+                spark.conf.set(conf, saved)
+            only_new = new.exceptAll(old).limit(5).collect()
+            only_old = old.exceptAll(new).limit(5).collect()
+            assert not only_new and not only_old, (
+                f"streamed kernel/join divergence at "
+                f"max_hamming={max_hamming} bands={bands}: "
+                f"only_new={only_new} only_old={only_old}"
+            )
+            # the copies alone give C(800, 2) pairs at hamming 0
+            assert new.count() >= 800 * 799 // 2
 
 
 class TestEmbeddingOps:

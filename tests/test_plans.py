@@ -223,6 +223,26 @@ class TestMinHashHop:
         assert dedup._CACHE_HANDLES == []
 
 
+class TestSimHashKernel:
+    def test_bucket_exchange_sized_by_aqe(self, spark, sf_dir):
+        """The SimHash bucket kernel's one exchange is a column
+        repartition on (band, key) with no fixed partition count, so
+        AQE sizes and coalesces it; hash partitioning keeps each bucket
+        in one partition.  No band self-join remains."""
+        from graphgen_spark.datapipe.dedup import simhash_dup_pairs
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        p = plan_of(simhash_dup_pairs(docs))
+        assert re.search(
+            r"hashpartitioning\(band#\d+, key#\d+L?, \d+\), "
+            r"REPARTITION_BY_COL", p
+        )
+        assert "REPARTITION_BY_NUM" not in p
+        assert "Join" not in p
+        # the signature hop and the bucket kernel
+        assert n_nodes(p, "MapInPandas") == 2
+
+
 class TestWidenNarrow:
     """``session.widen_narrow``: the one rule both Python-hop entry
     points (``run_kg_pipeline`` pages, the MinHash hop's docs) use to

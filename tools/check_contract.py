@@ -35,6 +35,7 @@ outputs, which every oracle query in the registry is.)
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -42,7 +43,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from graphgen_spark.session import get_spark  # noqa: E402
 

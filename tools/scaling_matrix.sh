@@ -3,9 +3,10 @@
 # report the MIN wall per level (standard noise-resistant estimator).
 # Output: one JSON line per run appended to $OUT.
 set -u
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 N_PAGES="${1:-160000}"
 REPEATS="${2:-3}"
-OUT="${3:-/root/repo/BENCH_SCALING.jsonl}"
+OUT="${3:-$ROOT/BENCH_SCALING.jsonl}"
 # N=2 vs 4N=8: the widest pair whose total busy vCPUs (python workers
 # + JVM task threads) stays under this host's ~12-vCPU steal threshold
 # — above it the hypervisor visibly steals cycles (see BASELINE.md
@@ -21,7 +22,7 @@ for i in $(seq 1 "$REPEATS"); do
       --conf spark.local.dir=/dev/shm/spark-local \
       --conf spark.sql.files.maxPartitionBytes=2m \
       --conf spark.sql.shuffle.partitions=$PARTS \
-      /root/repo/tools/scaling_run.py "$N_PAGES" 2>/dev/null | tail -1 >> "$OUT"
+      "$ROOT/tools/scaling_run.py" "$N_PAGES" 2>/dev/null | tail -1 >> "$OUT"
   done
 done
 echo "done" >> "$OUT"

@@ -15,10 +15,12 @@ Reports two walls:
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 
@@ -35,8 +37,6 @@ n_ent = synth.n_entities_for(n_pages)
 spark = SparkSession.builder.appName("scaling_run").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 cpus = spark.sparkContext.defaultParallelism
-
-import os
 
 # corpus + dictionary labels are landed as parquet ONCE (any process);
 # the measured session reads them back like production

@@ -14,10 +14,12 @@ Usage: python tools/skew_probe.py [n_pages]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
 MIN_TASKS = 8          # stages smaller than this are all-overhead
