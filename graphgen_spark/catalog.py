@@ -1,157 +1,21 @@
-"""Table catalog: Iceberg-style partitioned tables for the KG outputs.
+"""Snapshot commits: Iceberg's core commit model, emulated on parquet.
 
-BASELINE.json targets Iceberg tables of Common-Crawl pages.  The
-sandbox has no Iceberg runtime jar, so this module provides one code
-path with two backends, chosen at runtime:
-
-- ``iceberg``: real ``writeTo(...).using("iceberg")`` + MERGE INTO
-  upserts, used when the session has an Iceberg catalog configured
-  (``spark.sql.catalog.<name>`` conf present).
-- ``parquet``: identical logical layout — same schemas, same
-  partition spec (bucket(url) becomes an explicit ``url_bucket``
-  column, time partitions become date columns) — with anti-join +
-  append emulating insert-only MERGE.
-
-Partition specs mirror what we would declare in Iceberg DDL:
-pages/docs/chunks/triples by ``bucket(N, url)``; nodes/edges by
-``bucket(N, entity key)``.
+Every write is a new immutable snapshot; a snapshot's manifest lists
+the data directories that comprise it (append = parent manifest + one
+new dir, overwrite = one new dir); the table's current version is a
+single pointer file swapped with an atomic ``os.replace``.  Readers see
+the old or the new snapshot, never a partial write; time travel and
+rollback are metadata-only.  Single-writer per table (the Iceberg
+optimistic-retry loop needs a CAS the local FS doesn't give us —
+documented boundary).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-DEFAULT_BUCKETS = 64
-
-
-def has_iceberg(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured on the session."""
-    try:
-        confs = spark.sparkContext.getConf().getAll()
-    except Exception:
-        return False
-    return any(
-        k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower()
-        for k, v in confs
-    )
-
-
-def with_bucket(
-    df: DataFrame, key_col: str, n_buckets: int = DEFAULT_BUCKETS,
-    bucket_col: str = "part_bucket",
-) -> DataFrame:
-    """Explicit bucket column = pmod(xxhash64(key), n) — the parquet
-    emulation of Iceberg's bucket(n, key) partition transform (same
-    co-location property for joins on the key)."""
-    return df.withColumn(
-        bucket_col, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-
-
-def save_table(
-    spark: SparkSession,
-    df: DataFrame,
-    location: str,
-    name: str,
-    bucket_key: str | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
-    mode: str = "overwrite",
-) -> None:
-    """Write a KG table with the standard partition spec."""
-    if has_iceberg(spark):
-        writer = df.writeTo(f"{name}").using("iceberg")
-        if bucket_key is not None:
-            writer = writer.partitionedBy(
-                F.bucket(n_buckets, F.col(bucket_key))
-            )
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    out = df
-    partition_by = None
-    if bucket_key is not None:
-        out = with_bucket(df, bucket_key, n_buckets)
-        partition_by = "part_bucket"
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(os.path.join(location, name))
-
-
-def load_table(spark: SparkSession, location: str, name: str) -> DataFrame:
-    if has_iceberg(spark):
-        return spark.table(name)
-    return spark.read.parquet(os.path.join(location, name))
-
-
-def upsert_insert_only(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    location: str,
-    name: str,
-    key_cols: list[str],
-) -> DataFrame:
-    """Insert-only upsert (the reference KV semantics,
-    ``storage/kv/json_storage.py:48-52``): Iceberg MERGE INTO ... WHEN
-    NOT MATCHED THEN INSERT, or anti-join + append on parquet."""
-    if has_iceberg(spark):
-        new_rows.createOrReplaceTempView("_upsert_src")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        spark.sql(
-            f"MERGE INTO {name} t USING _upsert_src s ON {on} "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        return spark.table(name)
-    path = os.path.join(location, name)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        to_add = new_rows.join(
-            existing.select(*key_cols), key_cols, "left_anti"
-        )
-        to_add.write.mode("append").parquet(path)
-    else:
-        new_rows.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def save_kg(
-    spark: SparkSession, out: dict, location: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
-    """Materialize the pipeline dict with the standard partition
-    specs (url-bucketed facts, entity-bucketed graph tables)."""
-    spec = {
-        "triples": "url",
-        "chunks": "url",
-        "nodes": "entity_name",
-        "edges": "src_id",
-    }
-    for name, key in spec.items():
-        if name in out:
-            save_table(
-                spark, out[name], location, name,
-                bucket_key=key, n_buckets=n_buckets,
-            )
-
-
-# ------------------------------------------------- snapshot semantics
-#
-# Iceberg's core commit model, emulated on parquet: every write is a
-# new immutable snapshot; a snapshot's manifest lists the data
-# directories that comprise it (append = parent manifest + one new
-# dir, overwrite = one new dir); the table's current version is a
-# single pointer file swapped with an atomic os.replace.  Readers see
-# the old or the new snapshot, never a partial write; time travel and
-# rollback are metadata-only.  Single-writer per table (the Iceberg
-# optimistic-retry loop needs a CAS the local FS doesn't give us —
-# documented boundary).
-
-import json as _json
 
 
 def _meta_dir(location: str, name: str) -> str:
@@ -175,7 +39,7 @@ def _load_meta(location: str, name: str, snapshot_id: int) -> dict:
         _meta_dir(location, name), f"v{snapshot_id:05d}.json"
     )
     with open(p, encoding="utf-8") as f:
-        return _json.load(f)
+        return json.load(f)
 
 
 def snapshot_write(
@@ -184,9 +48,6 @@ def snapshot_write(
     location: str,
     name: str,
     mode: str = "append",
-    bucket_key: str | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
-    summary: dict | None = None,
 ) -> int:
     """Commit ``df`` as a new snapshot of table ``name``; returns the
     new snapshot id.  ``mode='append'`` adds the rows to the current
@@ -216,15 +77,7 @@ def snapshot_write(
     data_rel = os.path.join("snapshots", f"snap-{snap_id:05d}")
     data_path = os.path.join(location, name, data_rel)
 
-    out = df
-    partition_by = None
-    if bucket_key is not None:
-        out = with_bucket(df, bucket_key, n_buckets)
-        partition_by = "part_bucket"
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(data_path)
+    df.write.mode("overwrite").parquet(data_path)
 
     if mode == "append" and parent is not None:
         parent_meta = _load_meta(location, name, parent)
@@ -237,8 +90,7 @@ def snapshot_write(
         "parent_id": parent,
         "operation": mode,
         "data_dirs": data_dirs,
-        "schema": out.schema.jsonValue(),
-        "summary": summary or {},
+        "schema": df.schema.jsonValue(),
     }
     os.makedirs(_meta_dir(location, name), exist_ok=True)
     meta_path = os.path.join(
@@ -246,7 +98,7 @@ def snapshot_write(
     )
     tmp = meta_path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        _json.dump(meta, f, sort_keys=True)
+        json.dump(meta, f, sort_keys=True)
     os.replace(tmp, meta_path)
 
     hint_tmp = _hint_path(location, name) + ".tmp"
@@ -277,10 +129,9 @@ def snapshot_read(
     paths = [
         os.path.join(location, name, rel) for rel in meta["data_dirs"]
     ]
-    # one read per snapshot dir + union: partition discovery cannot
-    # span sibling snapshot dirs (each has its own part_bucket=N
-    # layout under a non-k=v snap-... segment); a union of a handful
-    # of append snapshots is plan-cheap and keeps pruning per dir
+    # one read per snapshot dir + union by name: appended snapshots
+    # may differ in columns, and a union of a handful of them is
+    # plan-cheap
     from functools import reduce
 
     dfs = [spark.read.parquet(p) for p in paths]
@@ -297,35 +148,3 @@ def snapshot_rollback(location: str, name: str, snapshot_id: int) -> None:
     with open(hint_tmp, "w", encoding="utf-8") as f:
         f.write(str(snapshot_id))
     os.replace(hint_tmp, _hint_path(location, name))
-
-
-def snapshot_compact(
-    spark: SparkSession, location: str, name: str
-) -> int:
-    """Maintenance: rewrite the current snapshot's N data dirs into one
-    (an Iceberg rewrite_data_files analogue).  Contents are unchanged —
-    the new snapshot reads back row-identical; old snapshots stay
-    time-travel-readable."""
-    sid = current_snapshot_id(location, name)
-    if sid is None:
-        raise FileNotFoundError(
-            f"no committed snapshot for table {name} at {location}"
-        )
-    meta = _load_meta(location, name, sid)
-    df = snapshot_read(spark, location, name)
-    return snapshot_write(
-        spark, df, location, name, mode="overwrite",
-        summary={"compacted_from": meta["data_dirs"]},
-    )
-
-
-def snapshot_log(location: str, name: str) -> list[dict]:
-    """Ancestry chain of the CURRENT snapshot, oldest first (the
-    Iceberg history table equivalent)."""
-    out: list[dict] = []
-    sid = current_snapshot_id(location, name)
-    while sid is not None:
-        meta = _load_meta(location, name, sid)
-        out.append(meta)
-        sid = meta["parent_id"]
-    return list(reversed(out))

@@ -4,8 +4,10 @@ columns with typed metadata.
 The reference routes image/table/formula chunks through MMKGBuilder
 (``operators/build_kg/build_mm_kg.py``); this module provides the
 Spark-side plumbing a 100 TB multimodal pipeline needs — schema,
-partitioning, Arrow batch shapes, UDF signatures — with the actual
-codec work stubbed: the container has no image/audio libraries, so
+partitioning, Arrow batch shapes, UDF signatures — for two operators:
+``extract_features`` (one feature vector per media row) and
+``byte_histograms`` (a decode-free content fingerprint).  The codec
+work is stubbed: the container has no image/audio libraries, so
 decode runs a deterministic fake when ``use_fake=True`` (default) and
 raises ``NotImplementedError`` pointing at the real dependency
 otherwise.  Everything around the stub (column layout, mapInPandas
@@ -19,7 +21,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -51,15 +52,6 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("frame_index", T.IntegerType(), False),
-        T.StructField("frame_ts_ms", T.IntegerType(), False),
-        T.StructField("frame_payload", T.BinaryType(), False),
-    ]
-)
-
 FEATURE_DIM = 32
 
 
@@ -84,7 +76,7 @@ def _fake_feature(payload: bytes) -> np.ndarray:
 
 
 def extract_features(
-    media: DataFrame, use_fake: bool = True, batch_rows: int = 256
+    media: DataFrame, use_fake: bool = True
 ) -> DataFrame:
     """media -> (media_id, modality, feature[FEATURE_DIM], feat_dim);
     Arrow-batched mapInPandas, repartition-friendly (no state)."""
@@ -110,46 +102,6 @@ def extract_features(
     return media.select("media_id", "modality", "payload").mapInPandas(
         gen, schema=FEATURE_SCHEMA
     )
-
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, use_fake: bool = True
-) -> DataFrame:
-    """video rows -> one row per sampled frame (duration/every_ms
-    frames).  The fake emits a content-derived 16-byte pseudo-frame;
-    a real decoder would emit JPEG bytes with the same row shape."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            for mid, modality, payload, meta in zip(
-                pdf["media_id"], pdf["modality"], pdf["payload"],
-                pdf["meta"],
-            ):
-                if modality != "video":
-                    continue
-                duration = (meta or {}).get("duration_ms") or 0
-                n_frames = max(1, duration // every_ms)
-                for i in range(int(n_frames)):
-                    if use_fake:
-                        frame = hashlib.blake2b(
-                            bytes(payload or b"") + i.to_bytes(4, "big"),
-                            digest_size=16,
-                        ).digest()
-                    else:
-                        frame = _decode_real(payload, "video")
-                    rows.append((mid, i, i * every_ms, frame))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_index", "frame_ts_ms",
-                    "frame_payload",
-                ],
-            )
-
-    return media.mapInPandas(gen, schema=FRAME_SCHEMA)
 
 
 HIST_SCHEMA = T.StructType(

@@ -1,10 +1,6 @@
 """Text analysis operators for pretraining-data curation.
 
-- language-ID: the reference's CJK-ratio heuristic extended with a
-  stopword vote for latin languages (deterministic, no model)
-- quality scoring: length / punctuation / stopword / repetition ratios
 - token counting: whitespace + BPE-ish regex tokenizer
-- fingerprinting: rolling polynomial hash over tokens
 
 Plus the reference's QA evaluators re-expressed:
 - MTLD lexical diversity (``models/evaluator/qa/mtld_evaluator.py``):
@@ -15,21 +11,10 @@ Plus the reference's QA evaluators re-expressed:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-_STOPWORDS = {
-    "en": {"the", "a", "and", "of", "to", "in", "is", "was", "with",
-           "for", "on", "that", "it", "as", "are"},
-    "es": {"el", "la", "de", "que", "y", "en", "los", "del", "se",
-           "las", "por", "un", "para", "con", "una"},
-    "fr": {"le", "la", "de", "et", "les", "des", "en", "un", "du",
-           "une", "que", "est", "pour", "qui", "dans"},
-    "de": {"der", "die", "und", "in", "den", "von", "zu", "das",
-           "mit", "sich", "des", "auf", "für", "ist", "im"},
-}
 
 
 def whitespace_token_count(text_col: Column) -> Column:
@@ -51,89 +36,6 @@ def bpe_ish_token_count(text_col: Column) -> Column:
     return F.size(
         F.regexp_extract_all(text_col, F.lit(BPE_ISH_PATTERN), 0)
     )
-
-
-def with_quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """+ (n_tokens, mean_token_len, punct_ratio, stopword_ratio,
-    repetition_ratio, quality_score) — all native expressions."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    n_punct = n_chars - F.length(
-        F.regexp_replace(F.col(text_col), r"[^\w\s]", "")
-    )
-    n_stop = F.size(
-        F.filter(
-            toks,
-            lambda t: F.lower(t).isin(
-                *sorted(set().union(*_STOPWORDS.values()))
-            ),
-        )
-    )
-    n_distinct = F.size(F.array_distinct(toks))
-    return (
-        docs.withColumn("n_tokens", n_tokens)
-        .withColumn(
-            "mean_token_len",
-            (F.length(F.regexp_replace(F.col(text_col), r"\s+", "")))
-            / F.greatest(n_tokens, F.lit(1)),
-        )
-        .withColumn(
-            "punct_ratio", n_punct / F.greatest(n_chars, F.lit(1))
-        )
-        .withColumn(
-            "stopword_ratio", n_stop / F.greatest(n_tokens, F.lit(1))
-        )
-        .withColumn(
-            "repetition_ratio",
-            F.lit(1.0) - n_distinct / F.greatest(n_tokens, F.lit(1)),
-        )
-        .withColumn(
-            "quality_score",
-            (
-                F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 0.4
-                + (F.lit(1.0) - F.col("repetition_ratio")) * 0.3
-                + F.least(F.col("stopword_ratio") * F.lit(5.0), F.lit(1.0))
-                * 0.2
-                + (F.lit(1.0) - F.least(F.col("punct_ratio") * 5,
-                                        F.lit(1.0))) * 0.1
-            ),
-        )
-    )
-
-
-@pandas_udf(T.StringType())
-def detect_language_udf(text: pd.Series) -> pd.Series:
-    """zh via the reference CJK-ratio rule; latin langs by stopword
-    vote; 'en' fallback (deterministic n-gram/stopword heuristic)."""
-    from graphgen_spark.textkit import detect_main_language
-
-    def detect(t: str) -> str:
-        t = t or ""
-        if detect_main_language(t) == "zh":
-            return "zh"
-        toks = [w.strip(".,;:!?\"'()").lower() for w in t.split()]
-        votes = {
-            lang: sum(1 for w in toks if w in sw)
-            for lang, sw in _STOPWORDS.items()
-        }
-        best = max(votes, key=lambda k: (votes[k], k))
-        return best if votes[best] > 0 else "en"
-
-    return text.map(detect)
-
-
-def rolling_fingerprint(text_col: Column, window: int = 8) -> Column:
-    """Document fingerprint: min of rolling xxhash64 over token
-    windows (winnowing-style; equal fingerprints => shared window)."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    windows = F.transform(
-        F.sequence(
-            F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))
-        ),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, window))),
-    )
-    return F.array_min(windows)
 
 
 def mtld(text: str, ttr_threshold: float = 0.72) -> float:

@@ -31,10 +31,6 @@ RDF_SUFFIXES = {".nt"}
 TURTLE_SUFFIXES = {".ttl"}
 PICKLE_SUFFIXES = {".pkl", ".pickle"}
 
-ALLOWED_DOC_TYPES = (
-    "text", "image", "table", "equation", "protein", "dna", "rna"
-)
-
 
 def _suffix(path: str) -> str:
     return os.path.splitext(path)[1].lower()

@@ -107,16 +107,3 @@ def coverage_by_url(triples: DataFrame) -> DataFrame:
         F.countDistinct("pred").alias("n_predicates"),
         F.countDistinct("chunk_id").alias("n_chunks"),
     )
-
-
-def entity_coverage(triples: DataFrame) -> DataFrame:
-    """Per-entity coverage: in how many urls/chunks/triples does each
-    canonical subject or object appear (salting-friendly two-key agg)."""
-    mentions = triples.select(
-        F.explode(F.array("subj", "obj")).alias("entity"), "url", "chunk_id"
-    )
-    return mentions.groupBy("entity").agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.countDistinct("url").alias("n_urls"),
-        F.countDistinct("chunk_id").alias("n_chunks"),
-    )

@@ -121,18 +121,12 @@ def commit_kg_state(
 
 
 def load_kg_state(
-    spark: SparkSession,
-    location: str,
-    snapshot_ids: dict[str, int] | None = None,
+    spark: SparkSession, location: str
 ) -> dict[str, DataFrame]:
     from graphgen_spark.catalog import snapshot_read
 
     return {
-        name: snapshot_read(
-            spark, location, name,
-            snapshot_id=(snapshot_ids or {}).get(name),
-        ).drop("part_bucket")
-        for name in STATE_TABLES
+        name: snapshot_read(spark, location, name) for name in STATE_TABLES
     }
 
 

@@ -73,10 +73,6 @@ def detect_main_language(text: str) -> str:
     return "zh" if zh / total >= 0.5 else "en"
 
 
-def tokenize(text: str) -> list[str]:
-    return _TOKEN_RE.findall(text)
-
-
 def count_tokens(text: str) -> int:
     return len(_TOKEN_RE.findall(text))
 

@@ -1,22 +1,12 @@
-"""Catalog (Iceberg-style partitioned tables), streaming ingest, and
+"""Snapshot commits (catalog.py), streaming ingest, and
 confidence-kernel tests."""
 
 import math
-import shutil
-import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphgen_spark import synth
-from graphgen_spark.catalog import (
-    has_iceberg,
-    load_table,
-    save_kg,
-    save_table,
-    upsert_insert_only,
-    with_bucket,
-)
 from graphgen_spark.confidence import normalize_yes_no, yes_no_loss_entropy
 
 
@@ -48,53 +38,6 @@ class TestConfidence:
         assert abs(loss - (-math.log(0.5) + 0.0) / 2) < 1e-9
 
 
-class TestCatalog:
-    def test_no_iceberg_in_sandbox(self, spark):
-        assert has_iceberg(spark) is False
-
-    def test_bucketed_save_load(self, spark, tmp_path):
-        df = spark.createDataFrame(
-            [(f"u{i}", i) for i in range(50)], ["url", "v"]
-        )
-        save_table(spark, df, str(tmp_path), "t1", bucket_key="url",
-                   n_buckets=8)
-        back = load_table(spark, str(tmp_path), "t1")
-        assert back.count() == 50
-        assert "part_bucket" in back.columns
-        assert back.select("part_bucket").distinct().count() <= 8
-        # bucket assignment is deterministic (co-location property)
-        b = with_bucket(df, "url", 8).select("url", "part_bucket")
-        b2 = with_bucket(df.repartition(7), "url", 8).select(
-            "url", "part_bucket"
-        )
-        assert {tuple(r) for r in b.collect()} == {
-            tuple(r) for r in b2.collect()
-        }
-
-    def test_insert_only_upsert(self, spark, tmp_path):
-        a = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
-        upsert_insert_only(spark, a, str(tmp_path), "t2", ["k"])
-        b = spark.createDataFrame([(2, "CHANGED"), (3, "z")], ["k", "v"])
-        final = upsert_insert_only(spark, b, str(tmp_path), "t2", ["k"])
-        rows = {r["k"]: r["v"] for r in final.collect()}
-        # insert-only: existing key 2 NOT overwritten
-        assert rows == {1: "x", 2: "y", 3: "z"}
-
-    def test_save_kg_layout(self, spark, tmp_path):
-        pages = synth.pages_df(spark, 20, 100)
-        from graphgen_spark.pipelines import run_kg_pipeline
-
-        out = run_kg_pipeline(
-            spark, pages, alias_dict=synth.alias_dictionary_df(spark, 100),
-            chunk_size=256, chunk_overlap=32,
-        )
-        save_kg(spark, out, str(tmp_path), n_buckets=4)
-        for name in ("triples", "chunks", "nodes", "edges"):
-            t = load_table(spark, str(tmp_path), name)
-            assert t.count() > 0, name
-            assert "part_bucket" in t.columns
-
-
 class TestStreamingIngest:
     def test_drain_and_resume_semantics(self, spark, tmp_path):
         from graphgen_spark.streaming import start_kg_ingest
@@ -108,31 +51,42 @@ class TestStreamingIngest:
         synth.pages_df(spark, 15, 100).write.mode("overwrite").parquet(
             landing
         )
-        q = start_kg_ingest(spark, landing, ckpt, sckpt, alias_dict=alias,
-                            chunk_size=256, chunk_overlap=32)
-        q.awaitTermination(120)
-        t1 = spark.read.parquet(f"{ckpt}/triples")
-        n1 = t1.count()
-        assert n1 > 0
+        queries = []
+        try:
+            # each query must drain (awaitTermination -> True) before
+            # the next one starts on the same checkpoint location
+            q = start_kg_ingest(spark, landing, ckpt, sckpt,
+                                alias_dict=alias,
+                                chunk_size=256, chunk_overlap=32)
+            queries.append(q)
+            assert q.awaitTermination(120) is True
+            t1 = spark.read.parquet(f"{ckpt}/triples")
+            n1 = t1.count()
+            assert n1 > 0
 
-        # batch 2 lands (new pages): stream picks up ONLY new files
-        synth.pages_df(spark, 30, 100).where(
-            ~F.col("url").isin(
-                [r["url"] for r in spark.read.parquet(landing)
-                 .select("url").collect()]
-            )
-        ).write.mode("append").parquet(landing)
-        q2 = start_kg_ingest(spark, landing, ckpt, sckpt, alias_dict=alias,
-                             chunk_size=256, chunk_overlap=32)
-        q2.awaitTermination(120)
-        t2 = spark.read.parquet(f"{ckpt}/triples")
-        n2 = t2.count()
-        assert n2 >= n1
-        # no duplicate chunks across micro-batches
-        chunks = spark.read.parquet(f"{ckpt}/chunks")
-        assert chunks.count() == chunks.select(
-            "chunk_id", "url"
-        ).distinct().count()
+            # batch 2 lands (new pages): stream picks up ONLY new files
+            synth.pages_df(spark, 30, 100).where(
+                ~F.col("url").isin(
+                    [r["url"] for r in spark.read.parquet(landing)
+                     .select("url").collect()]
+                )
+            ).write.mode("append").parquet(landing)
+            q2 = start_kg_ingest(spark, landing, ckpt, sckpt,
+                                 alias_dict=alias,
+                                 chunk_size=256, chunk_overlap=32)
+            queries.append(q2)
+            assert q2.awaitTermination(120) is True
+            t2 = spark.read.parquet(f"{ckpt}/triples")
+            n2 = t2.count()
+            assert n2 >= n1
+            # no duplicate chunks across micro-batches
+            chunks = spark.read.parquet(f"{ckpt}/chunks")
+            assert chunks.count() == chunks.select(
+                "chunk_id", "url"
+            ).distinct().count()
+        finally:
+            for query in queries:
+                query.stop()
 
 
 class TestSnapshotTable:
@@ -141,8 +95,8 @@ class TestSnapshotTable:
 
     def test_snapshot_lifecycle(self, spark, tmp_path):
         from graphgen_spark.catalog import (
+            _load_meta,
             current_snapshot_id,
-            snapshot_log,
             snapshot_read,
             snapshot_rollback,
             snapshot_write,
@@ -152,21 +106,16 @@ class TestSnapshotTable:
         df1 = spark.range(5).select(
             F.col("id"), F.lit("a").alias("tag")
         )
-        s1 = snapshot_write(spark, df1, loc, "t", mode="overwrite",
-                            bucket_key="id", n_buckets=4)
+        s1 = snapshot_write(spark, df1, loc, "t", mode="overwrite")
         assert s1 == 1
         assert snapshot_read(spark, loc, "t").count() == 5
 
         df2 = spark.range(5, 8).select(
             F.col("id"), F.lit("b").alias("tag")
         )
-        s2 = snapshot_write(spark, df2, loc, "t", mode="append",
-                            bucket_key="id", n_buckets=4)
+        s2 = snapshot_write(spark, df2, loc, "t", mode="append")
         assert s2 == 2
-        cur = snapshot_read(spark, loc, "t")
-        assert cur.count() == 8
-        # bucket partition column landed
-        assert "part_bucket" in cur.columns
+        assert snapshot_read(spark, loc, "t").count() == 8
 
         # time travel: snapshot 1 is still the 5-row table
         assert snapshot_read(spark, loc, "t", snapshot_id=1).count() == 5
@@ -182,16 +131,17 @@ class TestSnapshotTable:
         df3 = spark.range(100, 102).select(
             F.col("id"), F.lit("c").alias("tag")
         )
-        s3 = snapshot_write(spark, df3, loc, "t", mode="append",
-                            bucket_key="id", n_buckets=4)
+        s3 = snapshot_write(spark, df3, loc, "t", mode="append")
         assert s3 == 3
         assert snapshot_read(spark, loc, "t").count() == 7  # 5 + 2
         assert snapshot_read(spark, loc, "t", snapshot_id=2).count() == 8
 
-        log = snapshot_log(loc, "t")
-        assert [m["snapshot_id"] for m in log] == [1, 3]
-        assert log[-1]["parent_id"] == 1
-        assert log[0]["operation"] == "overwrite"
+        # ancestry of the current snapshot: 3 -> 1 (2 is off the branch)
+        meta3 = _load_meta(loc, "t", 3)
+        assert meta3["parent_id"] == 1
+        meta1 = _load_meta(loc, "t", meta3["parent_id"])
+        assert meta1["parent_id"] is None
+        assert meta1["operation"] == "overwrite"
 
     def test_read_missing_table_raises(self, spark, tmp_path):
         from graphgen_spark.catalog import snapshot_read
@@ -222,35 +172,3 @@ class TestSnapshotTable:
         assert os.path.exists(os.path.join(meta, "v100001.json"))
         # the fakes were never overwritten
         assert open(os.path.join(meta, "v100000.json")).read() == "{}"
-
-
-class TestSnapshotCompact:
-    def test_compact_preserves_rows(self, spark, tmp_path):
-        from graphgen_spark.catalog import (
-            snapshot_compact,
-            snapshot_log,
-            snapshot_read,
-            snapshot_write,
-        )
-
-        loc = str(tmp_path)
-        for i in range(3):
-            snapshot_write(
-                spark,
-                spark.range(i * 10, (i + 1) * 10),
-                loc, "t", mode="append" if i else "overwrite",
-            )
-        before = sorted(
-            r["id"] for r in snapshot_read(spark, loc, "t").collect()
-        )
-        sid = snapshot_compact(spark, loc, "t")
-        after_meta = snapshot_log(loc, "t")[-1]
-        assert after_meta["snapshot_id"] == sid
-        assert len(after_meta["data_dirs"]) == 1
-        assert len(after_meta["summary"]["compacted_from"]) == 3
-        after = sorted(
-            r["id"] for r in snapshot_read(spark, loc, "t").collect()
-        )
-        assert after == before == list(range(30))
-        # pre-compaction snapshot still time-travels
-        assert snapshot_read(spark, loc, "t", snapshot_id=2).count() == 20

@@ -15,7 +15,6 @@ from graphgen_spark.datapipe.dedup import (
 )
 from graphgen_spark.datapipe.multimodal import (
     extract_features,
-    sample_frames,
     synth_media_df,
 )
 from graphgen_spark.datapipe.similarity import (
@@ -23,12 +22,7 @@ from graphgen_spark.datapipe.similarity import (
     ivf_topk,
     lsh_topk,
 )
-from graphgen_spark.datapipe.textstats import (
-    detect_language_udf,
-    mtld,
-    mtld_udf,
-    with_quality_scores,
-)
+from graphgen_spark.datapipe.textstats import mtld, mtld_udf
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -495,33 +489,6 @@ class TestEmbeddingOps:
 
 
 class TestTextStats:
-    def test_quality_scores(self, spark, dup_docs):
-        out = with_quality_scores(dup_docs).collect()
-        for r in out:
-            assert 0 <= r["punct_ratio"] <= 1
-            assert 0 <= r["stopword_ratio"] <= 1
-            assert 0 <= r["repetition_ratio"] <= 1
-            assert r["quality_score"] > 0
-        by_id = {r["doc_id"]: r for r in out}
-        assert by_id[0]["stopword_ratio"] > by_id[3]["stopword_ratio"]
-
-    def test_language_detection(self, spark):
-        rows = [
-            (0, "the cat is on the mat and it was warm"),
-            (1, "el gato está en la casa y es de madrid"),
-            (2, "le chat est dans la maison et les enfants"),
-            (3, "der hund ist in dem haus und die katze"),
-            (4, "这是一个完全中文的句子没有其他语言"),
-        ]
-        df = spark.createDataFrame(rows, ["i", "text"])
-        got = {
-            r["i"]: r["lang"]
-            for r in df.select(
-                "i", detect_language_udf("text").alias("lang")
-            ).collect()
-        }
-        assert got == {0: "en", 1: "es", 2: "fr", 3: "de", 4: "zh"}
-
     def test_mtld_properties(self):
         rep = mtld("a a a a a a a a a a a a")
         div = mtld(
@@ -592,20 +559,6 @@ class TestMultimodal:
                  synth_media_df(spark, 8).repartition(3)
              ).collect()}
         assert a == b
-
-    def test_frame_sampling(self, spark):
-        media = synth_media_df(spark, 12)
-        frames = sample_frames(media, every_ms=1000).collect()
-        assert frames
-        by_media = {}
-        for r in frames:
-            by_media.setdefault(r["media_id"], []).append(r)
-        videos = {r["media_id"] for r in media.collect()
-                  if r["modality"] == "video"}
-        assert set(by_media) == videos
-        for mid, rows in by_media.items():
-            idxs = sorted(r["frame_index"] for r in rows)
-            assert idxs == list(range(len(idxs)))
 
     def test_real_decode_raises(self, spark):
         media = synth_media_df(spark, 3)
