@@ -1060,7 +1060,8 @@ def embedding_neardup_pairs(
     ).select("id", "tbl", "bucket")
     # the kernel's input is NOT widened like the MinHash hop's: the
     # vector shuffle costs more than it saves (2k 64-d vectors, 4
-    # cores: a warm call's median went from 0.98 s to 1.39 s widened)
+    # cores, Python workers from the repo daemon: a warm call's median
+    # went from 0.71 s to 0.90 s widened, slower in 5 of 6 blocks)
     bucketed = _persist(bucketed)  # both sides of the bucket self-join
     left = bucketed.select(F.col("id").alias("a"), "tbl", "bucket")
     right = bucketed.select(F.col("id").alias("b"), "tbl", "bucket")

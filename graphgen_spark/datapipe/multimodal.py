@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata.
+columns tagged with their modality.
 
 The reference routes image/table/formula chunks through MMKGBuilder
 (``operators/build_kg/build_mm_kg.py``); this module provides the
@@ -11,7 +11,7 @@ work is stubbed: the container has no image/audio libraries, so
 decode runs a deterministic fake when ``use_fake=True`` (default) and
 raises ``NotImplementedError`` pointing at the real dependency
 otherwise.  Everything around the stub (column layout, mapInPandas
-iterator batching, metadata structs) is real and tested.
+iterator batching) is real and tested.
 """
 
 from __future__ import annotations
@@ -28,18 +28,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("media_id", T.StringType(), False),
         T.StructField("modality", T.StringType(), False),  # image|audio|video
         T.StructField("payload", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
     ]
 )
 
@@ -183,16 +171,9 @@ def synth_media_df(spark, n: int = 64) -> DataFrame:
                 payload = hashlib.blake2b(
                     f"media-{i}".encode(), digest_size=32
                 ).digest() * (4 + i % 5)
-                meta = {
-                    "mime": f"{modality}/fake",
-                    "width": 64 + (i % 8) * 16 if modality == "image" else None,
-                    "height": 64 if modality == "image" else None,
-                    "duration_ms": 3000 + (i % 5) * 1000
-                    if modality == "video" else None,
-                }
-                rows.append((f"m{i}", modality, payload, meta))
+                rows.append((f"m{i}", modality, payload))
             yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "payload", "meta"]
+                rows, columns=["media_id", "modality", "payload"]
             )
 
     n_parts = max(2, min(32, n // 16))
