@@ -106,15 +106,16 @@ def commit_kg_state(
     spark: SparkSession,
     state: dict[str, DataFrame],
     location: str,
-    mode: str = "overwrite",
 ) -> dict[str, int]:
     """Persist the state dict as snapshot tables (atomic pointer swap
-    per table; a bad crawl batch rolls back with snapshot_rollback)."""
+    per table; a bad crawl batch rolls back with snapshot_rollback).
+    Each snapshot overwrites: the state is already merged in full, so
+    an append would double every row."""
     from graphgen_spark.catalog import snapshot_write
 
     return {
         name: snapshot_write(
-            spark, state[name], location, name, mode=mode,
+            spark, state[name], location, name, mode="overwrite",
         )
         for name in STATE_TABLES
     }
@@ -144,4 +145,4 @@ def ingest_batch(
 
     if current_snapshot_id(location, STATE_TABLES[0]) is not None:
         new_state = merge_kg_state(load_kg_state(spark, location), new_state)
-    return commit_kg_state(spark, new_state, location, mode="overwrite")
+    return commit_kg_state(spark, new_state, location)
