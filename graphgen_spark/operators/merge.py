@@ -97,8 +97,9 @@ def _capped_aggs(df: DataFrame, keys: list[str]) -> DataFrame:
 
     The state is a commutative monoid (capped sorted sets compose:
     the K smallest of two K-smallest sets IS the global K smallest;
-    counts are additive) — the property the incremental pipeline
-    (pipelines/incremental.py) relies on."""
+    counts are additive).  Phase 2 relies on it to merge the salted
+    partials, and a fold of new batches into standing state would
+    merge whole states the same way."""
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64("source_id", "description"), F.lit(N_SALTS))
     )

@@ -97,13 +97,22 @@ def structure_metrics(
     }
 
 
+def _n_distinct(col: str):
+    """countDistinct without its Expand.  Spark plans distinct
+    aggregates as an Expand feeding a second aggregate whose generated
+    code varies from plan to plan (split-function parameter order), so
+    repeated calls kept compiling new classes.  Both forms skip nulls;
+    the cast keeps countDistinct's bigint."""
+    return F.size(F.collect_set(col)).cast("long")
+
+
 def coverage_by_url(triples: DataFrame) -> DataFrame:
     """Per-url coverage: triple count, distinct subjects/objects/
     predicates, distinct source chunks — one hash-aggregate shuffle."""
     return triples.groupBy("url").agg(
         F.count(F.lit(1)).alias("n_triples"),
-        F.countDistinct("subj").alias("n_subjects"),
-        F.countDistinct("obj").alias("n_objects"),
-        F.countDistinct("pred").alias("n_predicates"),
-        F.countDistinct("chunk_id").alias("n_chunks"),
+        _n_distinct("subj").alias("n_subjects"),
+        _n_distinct("obj").alias("n_objects"),
+        _n_distinct("pred").alias("n_predicates"),
+        _n_distinct("chunk_id").alias("n_chunks"),
     )

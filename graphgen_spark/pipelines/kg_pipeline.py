@@ -7,7 +7,7 @@ pages(url, warc_ts, html, text, lang)
                                                      [repartition url-hash]
   -> records_to_graph, the one records -> graph tail every entry point
      shares (this module, the checkpointed materializer, the config
-     runner's build_kg node, incremental state):
+     runner's build_kg node):
        entities / relations (projections)
        -> canonicalize (alias-dict broadcast link + CC labels when the
           hop did not link; drops self-loops on every path, with or
@@ -143,9 +143,10 @@ def canonicalize(
 class _LazyFrames(dict):
     """dict of named DataFrames where some entries are constructed on
     first access.  Building the merge_nodes/merge_edges plans costs
-    ~0.4 s of py4j round trips per run_kg_pipeline call (measured r7,
-    half the driver-side build), and the most common consumers (the
-    bench headline, triples-only batch callers) never touch them.
+    ~0.2-0.26 s of py4j round trips per run_kg_pipeline call, and the
+    docs/chunks plans ~0.05-0.06 s (medians over 9 warm calls, 100
+    synthetic pages, local[4] on 4 vCPUs); the most common consumers
+    (the bench headline, triples-only batch callers) never touch them.
     Each entry is built on its own: ``edges`` needs only the entities,
     so accessing it does not force ``nodes``.
     Any holistic access (iteration, keys/values/items) forces every

@@ -20,9 +20,12 @@ structural defense is that no positional read of an aggregate-built
 list remains in the SQL.
 """
 
+import pickle
 import random
+import signal
+import subprocess
+import sys
 
-import duckdb
 import pandas as pd
 import pytest
 
@@ -66,24 +69,56 @@ def _python_rows(names, pairs, nlen, elen, mu, mt, strategy="bfs"):
     )
 
 
+# DuckDB runs in a child process, one per query and one at a time:
+# DuckDB 1.0.0 once segfaulted inside this walk and took the whole
+# pytest process with it.  A crashed child fails only its own test.
+# The rows go back on the child's original stdout; its fd 1 points at
+# stderr so that DuckDB's progress bar cannot corrupt the pickle.
+_DUCKDB_CHILD = """
+import os, pickle, sys
+import duckdb
+out = os.fdopen(os.dup(1), "wb")
+os.dup2(2, 1)
+tables, threads, sql = pickle.load(sys.stdin.buffer)
+con = duckdb.connect()
+con.execute(f"PRAGMA threads={threads}")
+for name, pdf in tables.items():
+    con.register(name, pdf)
+pickle.dump(con.execute(sql).fetchall(), out)
+out.close()
+"""
+DUCKDB_CHILD_TIMEOUT_S = 300
+
+
+def _duckdb_child(tables, threads, sql):
+    proc = subprocess.run(
+        [sys.executable, "-c", _DUCKDB_CHILD],
+        input=pickle.dumps((tables, threads, sql)),
+        capture_output=True,
+        timeout=DUCKDB_CHILD_TIMEOUT_S,
+    )
+    if proc.returncode:
+        how = (f"killed by {signal.Signals(-proc.returncode).name}"
+               if proc.returncode < 0 else f"exit code {proc.returncode}")
+        stderr = proc.stderr.decode(errors="replace")[-2000:]
+        pytest.fail(f"DuckDB child process {how}\n{stderr}")
+    return pickle.loads(proc.stdout)
+
+
 def _duckdb_rows(names, pairs, nlen, elen, mu, mt, threads=8,
                  strategy="bfs"):
-    con = duckdb.connect()
-    con.execute(f"PRAGMA threads={threads}")
-    con.register(
-        "t_nodes",
-        pd.DataFrame({"name": names, "len": [nlen[m] for m in names]}),
-    )
-    con.register(
-        "t_edges",
-        pd.DataFrame(
+    tables = {
+        "t_nodes": pd.DataFrame(
+            {"name": names, "len": [nlen[m] for m in names]}
+        ),
+        "t_edges": pd.DataFrame(
             {
                 "src": [a for a, _ in pairs],
                 "tgt": [b for _, b in pairs],
                 "len": [elen[p] for p in pairs],
             }
         ),
-    )
+    }
     sql = (
         "WITH RECURSIVE "
         "bnodes AS MATERIALIZED (SELECT name, CAST(len AS BIGINT) AS len"
@@ -92,7 +127,7 @@ def _duckdb_rows(names, pairs, nlen, elen, mu, mt, threads=8,
         " CAST(len AS BIGINT) AS len FROM t_edges),"
         + _bfs_walk_sql(mu, mt, strategy)
     )
-    return sorted(tuple(r) for r in con.execute(sql).fetchall())
+    return sorted(tuple(r) for r in _duckdb_child(tables, threads, sql))
 
 
 # (seed, n_nodes, extra_edges, max_units, max_tokens): budget-bound,

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphgen_spark import synth
-from graphgen_spark.pipelines import alias_labels, run_kg_pipeline
+from graphgen_spark.pipelines import run_kg_pipeline
 
 from tests.conftest import composed_kg
 
@@ -109,10 +109,6 @@ class TestEntryPointsAgree:
     def test_same_graph_from_every_entry_point(
         self, spark, pathological_pages, tmp_path, with_dict
     ):
-        from graphgen_spark.pipelines.incremental import (
-            finalize_kg_state,
-            kg_state_from_records,
-        )
         from graphgen_spark.pipelines.materialize import run_checkpointed
 
         alias = synth.alias_dictionary_df(spark, 200) if with_dict else None
@@ -163,14 +159,3 @@ class TestEntryPointsAgree:
         assert [r["text"] for r in null_docs.collect()] == [""]
         null_chunks = ckpt["chunks"].where(F.col("url") == "http://x/null")
         assert null_chunks.count() == 0
-
-        labels = alias_labels(alias) if with_dict else None
-        state_edges = finalize_kg_state(
-            kg_state_from_records(composed["records"], labels)
-        )["edges"]
-
-        def pairs(edges):
-            return {tuple(r) for r in edges.select("src_id", "tgt_id")
-                    .collect()}
-
-        assert pairs(state_edges) == pairs(composed["edges"])

@@ -243,6 +243,56 @@ class TestSimHashKernel:
         assert n_nodes(p, "MapInPandas") == 2
 
 
+class TestCoveragePlan:
+    """``stats.coverage_by_url`` counts distinct values without a
+    distinct aggregate: no Expand, whose second aggregate Spark
+    generated anew from call to call."""
+
+    ROWS = [
+        ("u1", "a", "p", "b", "c1"),
+        ("u1", "a", "p", "b", "c1"),
+        ("u1", "a", None, None, "c2"),
+        ("u1", "b", "q", "a", None),
+        ("u2", "x", None, None, "c3"),
+        ("u3", None, None, None, None),
+    ]
+
+    def _triples(self, spark):
+        return spark.createDataFrame(
+            self.ROWS, "url string, subj string, pred string, "
+            "obj string, chunk_id string",
+        )
+
+    def test_no_expand(self, spark):
+        from graphgen_spark.operators.stats import coverage_by_url
+
+        cov = coverage_by_url(self._triples(spark))
+        optimized = cov._jdf.queryExecution().optimizedPlan().toString()
+        assert "Expand" not in optimized
+
+    def test_null_counts_match_python(self, spark):
+        from graphgen_spark.operators.stats import coverage_by_url
+
+        cov = coverage_by_url(self._triples(spark))
+        assert {f.name: f.dataType.simpleString()
+                for f in cov.schema.fields} == {
+            "url": "string", "n_triples": "bigint", "n_subjects": "bigint",
+            "n_objects": "bigint", "n_predicates": "bigint",
+            "n_chunks": "bigint",
+        }
+        want = {}
+        for url in {r[0] for r in self.ROWS}:
+            rows = [r for r in self.ROWS if r[0] == url]
+            want[url] = (len(rows),) + tuple(
+                len({r[i] for r in rows} - {None}) for i in (1, 3, 2, 4)
+            )
+        got = {r["url"]: (r["n_triples"], r["n_subjects"], r["n_objects"],
+                          r["n_predicates"], r["n_chunks"])
+               for r in cov.collect()}
+        assert got == want
+        assert got["u3"] == (1, 0, 0, 0, 0)
+
+
 class TestWidenNarrow:
     """``session.widen_narrow``: the one rule both Python-hop entry
     points (``run_kg_pipeline`` pages, the MinHash hop's docs) use to

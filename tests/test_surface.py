@@ -32,13 +32,6 @@ ALLOWLIST = {
     "start_kg_ingest": "streaming.py: the continuous-crawl entry point "
     "of run_checkpointed (with its read_pages_stream); ROADMAP "
     "direction 2 measures it",
-    "ingest_batch": "pipelines/incremental.py: the mergeable KG state "
-    "and its snapshot commits (catalog.py); ROADMAP direction 2 "
-    "decides whether they stay",
-    "finalize_kg_state": "pipelines/incremental.py: nodes/edges from "
-    "the mergeable state; ROADMAP direction 2",
-    "snapshot_rollback": "catalog.py: rollback of a bad crawl batch in "
-    "the snapshot commit model; ROADMAP direction 2",
     "read_metrics": "operators/checkpointing.py: reads the _metrics/ "
     "format; ROADMAP direction 5 gives it a caller",
     "MockGleaningLLM": "extraction.py: the test fake of the gleaning "
